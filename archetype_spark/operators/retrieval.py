@@ -188,9 +188,11 @@ def bm25_scores(
         # the when-chain as ONE CASE string inside the batched
         # selectExpr below (last-collected term outermost, matching
         # the F.when(...).otherwise(prev) nesting this replaces)
+        # (backslash is the SQL literal escape: doubled first, or a
+        # token like `a\b` reads as another string and loses its score)
         case = "CAST(NULL AS BIGINT)"
         for tok, dfv in literal_df.items():
-            esc = tok.replace("'", "''")
+            esc = tok.replace("\\", "\\\\").replace("'", "''")
             case = (
                 f"CASE WHEN token = '{esc}' THEN CAST({int(dfv)} AS BIGINT) "
                 f"ELSE {case} END"
@@ -233,7 +235,7 @@ def bm25_scores(
         f" ((dl * n_docs) / CAST(total_dl AS DOUBLE))))) * 1.0E6"
     )
     scored = scored_src.selectExpr(
-        id_col,
+        "`" + id_col.replace("`", "``") + "`",
         f"CAST(FLOOR(ABS({s}) * 1.0D + 0.5D) / 1.0D *"
         f" (CASE WHEN {s} < 0 THEN -1.0D ELSE 1.0D END) AS BIGINT)"
         " AS s_micro",

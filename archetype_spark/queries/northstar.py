@@ -1688,12 +1688,12 @@ def _ensure_iceberg_mirror_documents(spark: SparkSession, sf_dir: str) -> str:
     upsert-by-key v2 snapshot per sync. The overwrite commit re-adds
     every row, so a latest-wins or equality-delete bug DOUBLES the
     mirror — q126's per-lang counts catch it in the hash gate."""
-    from archetype_spark.sources.replicate import replicate_delta_to_iceberg
+    from archetype_spark.sources.replicate import replicate
 
     src = _ensure_delta_documents(spark, sf_dir)
 
     def build(base: DataFrame, btable: str) -> None:
-        replicate_delta_to_iceberg(spark, src, btable, ["doc_id"])
+        replicate(spark, src, btable, "delta", "iceberg", ["doc_id"])
 
     return _ensure_lake_documents(
         spark, sf_dir, "iceberg_mirror_documents", build
@@ -1725,7 +1725,7 @@ def q126_lake_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_delta_mirror_documents(spark: SparkSession, sf_dir: str) -> str:
     """The DELTA mirror of the q122 Iceberg CDC table, built by the
-    REVERSE replication direction (replicate_iceberg_to_delta): the
+    REVERSE replication direction (Iceberg -> Delta `replicate`): the
     source's four snapshots — v1 ingest (seq 0 after upgrade),
     equality delete, re-append with resurrected keys, one-commit
     upsert — replay through the derived changelog
@@ -1735,12 +1735,12 @@ def _ensure_delta_mirror_documents(spark: SparkSession, sf_dir: str) -> str:
     load-bearing: a missed equality recovery leaves dead rows, a
     broken same-snapshot ranking records upserted keys as deleted,
     and a re-applied batch doubles counts q138's hash gate catches."""
-    from archetype_spark.sources.replicate import replicate_iceberg_to_delta
+    from archetype_spark.sources.replicate import replicate
 
     src = _ensure_iceberg_cdc_documents(spark, sf_dir)
 
     def build(base: DataFrame, btable: str) -> None:
-        replicate_iceberg_to_delta(spark, src, btable, ["doc_id"])
+        replicate(spark, src, btable, "iceberg", "delta", ["doc_id"])
 
     return _ensure_lake_documents(
         spark, sf_dir, "delta_mirror_documents", build
@@ -2172,7 +2172,7 @@ def _ensure_hudi_mesh(spark: SparkSession, sf_dir: str) -> str:
     bootstrap and catch-up syncs, so the incremental path must
     propagate a real delete into mirrors where those keys are live —
     while Delta and Iceberg mirrors follow via
-    replicate_hudi_to_delta / replicate_hudi_to_iceberg in TWO syncs
+    `replicate` (hudi -> delta, hudi -> iceberg) in TWO syncs
     each: a mid-history bootstrap and a final catch-up. Each sync is
     O(changes): upserts from the incremental face, deleted keys from
     the delete blocks, one latest-wins shuffle, one atomic mirror
@@ -2182,10 +2182,7 @@ def _ensure_hudi_mesh(spark: SparkSession, sf_dir: str) -> str:
         upsert_hudi,
         write_hudi,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_hudi_to_delta,
-        replicate_hudi_to_iceberg,
-    )
+    from archetype_spark.sources.replicate import replicate
 
     def build(base: DataFrame, btable: str) -> None:
         src = os.path.join(btable, "src")
@@ -2201,8 +2198,8 @@ def _ensure_hudi_mesh(spark: SparkSession, sf_dir: str) -> str:
             even.filter(F.col("n_chars") % 5 == 2).select("doc_id"),
         )
         # mid-history bootstrap: mirrors hold the post-delete evens
-        replicate_hudi_to_delta(spark, src, dm)
-        replicate_hudi_to_iceberg(spark, src, im)
+        replicate(spark, src, dm, "hudi", "delta")
+        replicate(spark, src, im, "hudi", "iceberg")
         # mid-mesh delete (r14 advisor): these keys are LIVE in both
         # mirrors, so the catch-up sync must propagate a real delete
         # — the bootstrap-era delete's keys never existed there and
@@ -2229,8 +2226,8 @@ def _ensure_hudi_mesh(spark: SparkSession, sf_dir: str) -> str:
         )
         # incremental catch-up: inserts + updates land on bootstrapped
         # mirrors as one CDC commit each
-        replicate_hudi_to_delta(spark, src, dm)
-        replicate_hudi_to_iceberg(spark, src, im)
+        replicate(spark, src, dm, "hudi", "delta")
+        replicate(spark, src, im, "hudi", "iceberg")
 
     return _ensure_lake_documents(spark, sf_dir, "hudi_mesh", build, variant=1)
 
@@ -2429,11 +2426,11 @@ def _ensure_lake_relay(spark: SparkSession, sf_dir: str) -> str:
     """The six-direction mesh's TRANSITIVE fixture q149 reads: a
     Delta source (CDF on) plays the q127 cohort history (ingest,
     delete n_chars % 7 = 3, re-lang n_chars % 11 = 5 to 'xx') while a
-    HUDI mirror follows via replicate_delta_to_hudi in two syncs
+    HUDI mirror follows via `replicate` (delta -> hudi) in two syncs
     (bootstrap + catch-up: the CDF deletes land through
     apply_cdc_hudi's delete commit, updates through its upsert
     commit) — and then an ICEBERG mirror follows the HUDI MIRROR
-    (replicate_hudi_to_iceberg): second-hop CDC whose delete side
+    (hudi -> iceberg): second-hop CDC whose delete side
     comes from read_hudi_deleted_keys over commits apply_cdc_hudi
     itself wrote. Any loss at either hop breaks the third column."""
     from archetype_spark.sources import (
@@ -2442,10 +2439,7 @@ def _ensure_lake_relay(spark: SparkSession, sf_dir: str) -> str:
         write_delta,
     )
     from archetype_spark.sources.delta import enable_cdf_delta
-    from archetype_spark.sources.replicate import (
-        replicate_delta_to_hudi,
-        replicate_hudi_to_iceberg,
-    )
+    from archetype_spark.sources.replicate import replicate
 
     def build(base: DataFrame, btable: str) -> None:
         src = os.path.join(btable, "delta")
@@ -2453,13 +2447,13 @@ def _ensure_lake_relay(spark: SparkSession, sf_dir: str) -> str:
         im = os.path.join(btable, "iceberg")
         write_delta(base.repartition("lang"), src, partition_by=["lang"])
         enable_cdf_delta(src)
-        replicate_delta_to_hudi(spark, src, hm, record_key="doc_id")
+        replicate(spark, src, hm, "delta", "hudi", "doc_id")
         delete_where_delta(spark, src, "n_chars % 7 = 3")
         update_where_delta(
             spark, src, "n_chars % 11 = 5", {"lang": "'xx'"}
         )
-        replicate_delta_to_hudi(spark, src, hm, record_key="doc_id")
-        replicate_hudi_to_iceberg(spark, hm, im)
+        replicate(spark, src, hm, "delta", "hudi", "doc_id")
+        replicate(spark, hm, im, "hudi", "iceberg")
 
     return _ensure_lake_documents(spark, sf_dir, "lake_relay", build)
 
@@ -2777,12 +2771,12 @@ def _ensure_iceberg_cdf_mirror(spark: SparkSession, sf_dir: str) -> str:
     """The Iceberg mirror of the CDF table, q128: replication with
     DELETE PROPAGATION — the CDF source's delete and update commits
     apply to the mirror as one equality-delete + upsert snapshot."""
-    from archetype_spark.sources.replicate import replicate_delta_to_iceberg
+    from archetype_spark.sources.replicate import replicate
 
     src = _ensure_delta_cdf_documents(spark, sf_dir)
 
     def build(base: DataFrame, btable: str) -> None:
-        replicate_delta_to_iceberg(spark, src, btable, ["doc_id"])
+        replicate(spark, src, btable, "delta", "iceberg", ["doc_id"])
 
     return _ensure_lake_documents(
         spark, sf_dir, "iceberg_cdf_mirror_documents", build

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from archetype_spark.sources import dv as _dv
+from archetype_spark.sources import zonemap
 
 try:  # the wide-mask executor path ships dv's codec inside closures
     from pyspark.cloudpickle import register_pickle_by_value
@@ -585,7 +586,7 @@ def read_delta(
     # hand back the logical view
     out = out.select(*rename) if rename is not None else out
     if scan_filter:
-        out = out.filter(_scan_filter_predicate(scan_filter))
+        out = out.filter(zonemap.scan_filter_predicate(scan_filter))
     return out
 
 
@@ -801,57 +802,18 @@ def _stage_data_files(
 
 def _file_stats_json(abs_path: str, part_cols: Sequence[str]) -> str | None:
     """The Delta protocol's per-file `stats` JSON from the parquet
-    footer: numRecords, minValues/maxValues for numeric/date/
-    timestamp columns (strings record nullCount only — parquet may
-    TRUNCATE string min/max and a truncated max would prune wrong),
-    and nullCount. Keys are the footer's own (physical) column
-    names, which is what the protocol stores under column mapping.
-    Footer-only read, O(KB) — the same tier as the size/mtime the
-    add action already records. None when the footer yields nothing
-    (non-parquet staging never reaches here)."""
+    footer (zonemap.footer_stats): numRecords, minValues/maxValues for
+    numeric/date/timestamp columns (strings record nullCount only),
+    and nullCount. Keys are the footer's own (physical) column names,
+    which is what the protocol stores under column mapping; nested
+    leaves and partition columns record nothing. Footer-only read,
+    O(KB) — the same tier as the size/mtime the add action already
+    records."""
     import datetime as _dt
 
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(abs_path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    nulls: dict[str, int] = {}
-    dropped: set[str] = set()
-    no_nulls: set[str] = set()
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for c in range(rg.num_columns):
-            col = rg.column(c)
-            name = col.path_in_schema
-            if "." in name or name in part_cols:
-                continue  # nested leaves / partition cols: no stats
-            st = col.statistics
-            if st is None:
-                dropped.add(name)
-                no_nulls.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                nulls.pop(name, None)  # a partial count would be wrong
-                continue
-            if st.null_count is None:
-                no_nulls.add(name)
-                nulls.pop(name, None)
-            elif name not in no_nulls:
-                nulls[name] = nulls.get(name, 0) + int(st.null_count)
-            if (
-                name in dropped
-                or not st.has_min_max
-                or isinstance(st.min, (bytes, str))
-            ):
-                dropped.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            if name not in mins or st.min < mins[name]:
-                mins[name] = st.min
-            if name not in maxs or st.max > maxs[name]:
-                maxs[name] = st.max
+    n_rows, mins, maxs, nulls = zonemap.footer_stats(
+        abs_path, lambda name: "." not in name and name not in part_cols
+    )
 
     def ser(v):
         if isinstance(v, _dt.datetime):
@@ -864,7 +826,7 @@ def _file_stats_json(abs_path: str, part_cols: Sequence[str]) -> str | None:
             return None  # decimal/bool/unknown: record no bound
         return v
 
-    stats: dict = {"numRecords": md.num_rows}
+    stats: dict = {"numRecords": n_rows}
     if mins:
         lo = {k: ser(v) for k, v in sorted(mins.items())}
         hi = {k: ser(v) for k, v in sorted(maxs.items())}
@@ -945,44 +907,11 @@ def _add_survives_filter(
         else:
             lo = _stat_domain(mins.get(col), tn)
             hi = _stat_domain(maxs.get(col), tn)
-        if lo is None and hi is None:
-            continue
-        try:
-            if isinstance(flt, tuple):
-                f_lo = _stat_domain(flt[0], tn)
-                f_hi = _stat_domain(flt[1], tn)
-                if f_lo is not None and hi is not None and hi < f_lo:
-                    return False
-                if f_hi is not None and lo is not None and lo >= f_hi:
-                    return False
-            else:
-                v = _stat_domain(flt, tn)
-                if v is None:
-                    continue
-                if lo is not None and v < lo:
-                    return False
-                if hi is not None and v > hi:
-                    return False
-        except TypeError:
-            continue
+        if not zonemap.interval_survives(
+            lo, hi, flt, lambda v: _stat_domain(v, tn)
+        ):
+            return False
     return True
-
-
-def _scan_filter_predicate(scan_filter: dict):
-    """Row-level Column predicate for scan_filter: scalar equality;
-    (lo, hi) half-open, None unbounding a side — the re-application
-    that makes pruning an optimization, never the answer."""
-    pred = F.lit(True)
-    for col, flt in scan_filter.items():
-        if isinstance(flt, tuple):
-            lo, hi = flt
-            if lo is not None:
-                pred = pred & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                pred = pred & (F.col(col) < F.lit(hi))
-        else:
-            pred = pred & (F.col(col) == F.lit(flt))
-    return pred
 
 
 def count_rows_delta(path: str, version: int | None = None) -> int:
@@ -1547,7 +1476,7 @@ def read_delta_cdf(
     is nothing on disk that can say WHICH rows died.
 
     This is what lifts read_delta_changes' adds-only limit: CDC
-    consumers (replicate_delta_to_iceberg among them) get deletes and
+    consumers (Delta-sourced `replicate` among them) get deletes and
     update pre/post images at O(changes) cost."""
     table = os.path.abspath(path)
     latest = _latest_version(table)

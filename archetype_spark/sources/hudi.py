@@ -2361,8 +2361,8 @@ def read_hudi_deleted_keys(
 def last_commit_mark_hudi(path: str, key: str) -> str | None:
     """The newest completed instant's extraMetadata value for `key`
     (None if never stamped) — the generic exactly-once high-water
-    mark readback (replication consumers; the streaming sink has its
-    own app-keyed variant below). Archived instants included."""
+    mark readback (replication mirrors; the streaming sink reads its
+    app-keyed batch mark through it). Archived instants included."""
     table = os.path.abspath(path)
     for _i, _a, meta in reversed(_timeline_with_meta(table)):
         extra = meta.get("extraMetadata") or {}
@@ -2431,13 +2431,8 @@ def last_streaming_batch_hudi(path: str, app_id: str) -> int | None:
     metadata's extraMetadata (the field Hudi's own streaming writers
     stamp checkpoints into) — newest commit wins; None for a fresh
     table or unseen app."""
-    table = os.path.abspath(path)
-    key = _STREAM_KEY.format(app_id=app_id)
-    for _instant, _action, meta in reversed(_timeline_with_meta(table)):
-        extra = meta.get("extraMetadata") or {}
-        if key in extra:
-            return int(extra[key])
-    return None
+    v = last_commit_mark_hudi(path, _STREAM_KEY.format(app_id=app_id))
+    return int(v) if v is not None else None
 
 
 def streaming_hudi_sink(

@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from archetype_spark.sources import avro_io, ice_transforms
+from archetype_spark.sources import avro_io, ice_transforms, zonemap
 from archetype_spark.sources.delta import _scan_snapshot, _stage_data_files
 
 # The Avro data-file scan decodes executor-side (mapInPandas over
@@ -1008,43 +1008,23 @@ def _entry_survives_bounds(
         fid, ice_t = info
         lo_b = _decode_bound(lower[fid], ice_t) if fid in lower else None
         hi_b = _decode_bound(upper[fid], ice_t) if fid in upper else None
-        if lo_b is None and hi_b is None:
-            continue
-        try:
-            if isinstance(flt, tuple):
-                f_lo = _to_bound_domain(flt[0], ice_t)
-                f_hi = _to_bound_domain(flt[1], ice_t)
-                # half-open [f_lo, f_hi) vs closed [lo_b, hi_b]
-                if f_lo is not None and hi_b is not None and hi_b < f_lo:
-                    return False
-                if f_hi is not None and lo_b is not None and lo_b >= f_hi:
-                    return False
-            else:
-                v = _to_bound_domain(flt, ice_t)
-                if v is None:
-                    continue
-                if lo_b is not None and v < lo_b:
-                    return False
-                if hi_b is not None and v > hi_b:
-                    return False
-        except TypeError:
-            continue  # incomparable foreign value: keep the file
+        if not zonemap.interval_survives(
+            lo_b, hi_b, flt, lambda v: _to_bound_domain(v, ice_t)
+        ):
+            return False
     return True
 
 
 def _bounds_fields(abs_path: str, file_format: str, ice_fields: list) -> dict:
     """{'lower_bounds': [...], 'upper_bounds': [...]} manifest values
-    for one staged data file, from the parquet footer's row-group
-    statistics (min of mins / max of maxs across groups; a group
-    without stats for a column drops that column's bounds). Footer-
-    only read, O(KB) — the same tier as the record_count the entry
-    already requires. Empty dict for ORC/AVRO or when nothing is
-    recordable (strings and decimals are skipped: parquet may
-    truncate their stats and a truncated max prunes wrong)."""
+    for one staged data file, encoded from the parquet footer's
+    row-group statistics (zonemap.footer_stats). Footer-only read,
+    O(KB) — the same tier as the record_count the entry already
+    requires. Empty dict for ORC/AVRO or when nothing is recordable
+    (strings and decimals are skipped: parquet may truncate their
+    stats and a truncated max prunes wrong)."""
     if file_format.lower() != "parquet":
         return {}
-    import pyarrow.parquet as pq
-
     want = {
         f["name"]: (int(f["id"]), f["type"])
         for f in ice_fields
@@ -1052,27 +1032,9 @@ def _bounds_fields(abs_path: str, file_format: str, ice_fields: list) -> dict:
     }
     if not want:
         return {}
-    md = pq.ParquetFile(abs_path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    dropped: set[str] = set()
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for c in range(rg.num_columns):
-            col = rg.column(c)
-            name = col.path_in_schema
-            if name not in want or name in dropped:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                dropped.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            if name not in mins or st.min < mins[name]:
-                mins[name] = st.min
-            if name not in maxs or st.max > maxs[name]:
-                maxs[name] = st.max
+    _n, mins, maxs, _nulls = zonemap.footer_stats(
+        abs_path, want.__contains__
+    )
     lower, upper = [], []
     for name, (fid, ice_t) in want.items():
         if name in mins:
@@ -1084,23 +1046,6 @@ def _bounds_fields(abs_path: str, file_format: str, ice_fields: list) -> dict:
     if not lower:
         return {}
     return {"lower_bounds": lower, "upper_bounds": upper}
-
-
-def _filter_predicate(scan_filter: dict):
-    """The row-level Column predicate for `scan_filter`: scalar ->
-    equality; (lo, hi) -> lo <= col < hi (half-open; None unbounds a
-    side)."""
-    pred = F.lit(True)
-    for col, flt in scan_filter.items():
-        if isinstance(flt, tuple):
-            lo, hi = flt
-            if lo is not None:
-                pred = pred & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                pred = pred & (F.col(col) < F.lit(hi))
-        else:
-            pred = pred & (F.col(col) == F.lit(flt))
-    return pred
 
 
 def _scan_avro_files(
@@ -1365,7 +1310,7 @@ def _read_snapshot(
         # column must see the default, not the physical null
         scan = _with_initial_defaults(spark, scan, meta, by_fmt)
     if scan_filter:
-        scan = scan.filter(_filter_predicate(scan_filter))
+        scan = scan.filter(zonemap.scan_filter_predicate(scan_filter))
     seq_df = spark.createDataFrame(
         [
             (os.path.abspath(p), int(s), _part_fp(pv))
@@ -2635,8 +2580,8 @@ def upsert_by_key_iceberg(
 
     `properties_update` merges into the table properties IN THE SAME
     metadata commit as the upsert (the write_iceberg convention) —
-    the exactly-once handshake consumers like
-    replicate_delta_to_iceberg use for their high-water marks.
+    the exactly-once handshake Iceberg mirrors written by `replicate`
+    use for their high-water marks.
 
     Returns {'delete_files', 'delete_keys', 'files_added',
     'rows_inserted'}."""

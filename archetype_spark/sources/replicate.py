@@ -1,52 +1,26 @@
-"""Cross-format lake replication — ALL SIX directions of the
-tri-format mesh: Delta -> Iceberg/Hudi, Iceberg -> Delta/Hudi, and
-Hudi -> Delta/Iceberg. Any of the three open table formats can be
-the source of truth for a mirror in either other format; each
-direction composes one source-side latest-wins cut (_delta_pending /
-_iceberg_pending / _hudi_pending) with one sink-side CDC apply
-engine (apply_cdc_iceberg / apply_cdc_delta / apply_cdc_hudi), each
-carrying its exactly-once high-water mark in the sink's native
-atomic coordinate (table properties / txn actions / commit
-extraMetadata).
+"""Cross-format lake replication: all six directions of the
+Delta/Iceberg/Hudi mesh through one face, `replicate`. A source table
+keeps committing and a mirror in another format follows at
+O(changes) per sync, never O(table).
 
-The medallion/CDC pattern a heterogeneous lakehouse needs: a source
-table keeps committing, a mirror in the OTHER format follows at
-O(changes) per sync — never O(table). Three existing primitives
-compose into each direction; Delta->Iceberg:
+Each sync composes a source-side latest-wins cut of the pending
+commits (_delta_pending: read_delta_cdf, or the adds-only
+read_delta_changes without the Change Data Feed; _iceberg_pending:
+the read_iceberg_changes changelog with equality kills recovered via
+the prior snapshot; _hudi_pending: read_hudi_changes +
+read_hudi_deleted_keys) with the sink's CDC apply engine
+(apply_cdc_iceberg / apply_cdc_delta / apply_cdc_hudi). The engine
+writes the exactly-once high-water mark in the sink's own atomic
+commit coordinate, so a crashed-and-retried sync re-reads it
+(`replicated_mark`) and skips what was applied:
 
-- `read_delta_cdf` resolves every row-level CHANGE each source
-  commit made (O(changes) scan): plain appends derive as inserts,
-  and DELETE/UPDATE commits under the Change Data Feed serve their
-  _change_data files — deletes and update post-images replicate too;
-- a latest-wins cut per key collapses multi-commit batches (commit
-  version, then post-image over pre-image) so a key touched twice in
-  the range lands once, in its newest state;
-- `apply_cdc_iceberg` applies the batch as ONE v2 row-delta snapshot
-  (one equality-delete file covering deleted AND upserted keys, the
-  upsert rows as data files at the same sequence number), with the
-  source version high-water mark written to the mirror's TABLE
-  PROPERTIES in the SAME atomic metadata commit — the exactly-once
-  handshake: a crashed-and-retried sync re-reads the mark and skips
-  everything already applied; there is no window where rows are
-  applied but the mark is not (or vice versa).
-
-At 100 TB the asymmetry is the whole point: each sync moves only the
-changed rows plus a KB-scale equality-delete file; the mirror's
-history stays time-travelable per sync; compact_iceberg materializes
-the accumulated deletes on maintenance schedule.
-
-The REVERSE direction swaps the seams: `read_iceberg_changes` in its
-changelog form resolves the row-level changes (position-delete
-commits emit their tombstoned rows at O(deleted);
-`equality_via_prior_snapshot=True` opts into the documented
-O(prior-snapshot scan) that recovers equality-delete kills — the form
-`upsert_by_key_iceberg` mirrors need), the same latest-wins cut
-collapses the batch (snapshot SEQUENCE order, same-snapshot insert
-outranks its paired delete), and `apply_cdc_delta` lands it as ONE
-deletion-vector commit stamped with the protocol's `txn` action —
-the Delta-native exactly-once mark (appId `iceberg-replication`,
-version = the source's last applied sequence number, monotonic where
-snapshot ids are random 64-bit values).
+- Iceberg mirror: table property `replication.{delta,hudi}.last-*`
+  in the same metadata commit as the row-delta snapshot;
+- Delta mirror: `txn` action appId `{iceberg,hudi}-replication` in
+  the same log commit as the deletion-vector masks;
+- Hudi mirror: extraMetadata `replication.{delta,iceberg}.last-*` on
+  the final commit (a crash before it replays the whole batch, which
+  is idempotent).
 
 Declared limits (loud, inherited from the readers): Delta source
 commits that mutated rows BEFORE enable_cdf_delta carry no
@@ -66,84 +40,146 @@ from pyspark.sql import functions as F
 from archetype_spark.sources.delta import (
     _latest_version,
     _snapshot_actions,
+    apply_cdc_delta,
+    last_txn_version,
     read_delta_cdf,
     read_delta_changes,
+)
+from archetype_spark.sources.hudi import (
+    _hoodie_dir,
+    _load_properties,
+    apply_cdc_hudi,
+    hudi_timeline,
+    last_commit_mark_hudi,
+    read_hudi_changes,
+    read_hudi_deleted_keys,
 )
 from archetype_spark.sources.iceberg import (
     _current_metadata_version,
     _load_metadata,
     apply_cdc_iceberg,
+    read_iceberg_changes,
 )
 
-_MARK = "replication.delta.last-version"
+#: source format -> its commit coordinate, as named in the marks
+_COORD = {"delta": "version", "iceberg": "sequence", "hudi": "instant"}
 
 
-def replicated_delta_version(dst: str) -> int | None:
-    """The highest source commit version already applied to the
-    mirror (None for a fresh mirror) — read from the mirror's table
-    properties, so snapshot expiry can never re-open the window."""
+def _mark_name(src_format: str, dst_format: str) -> str:
+    """The mark's key in the mirror (txn appId, table property or
+    extraMetadata key); refuses an impossible direction."""
+    if src_format == dst_format or {src_format, dst_format} - set(_COORD):
+        raise ValueError(
+            f"no replication direction {src_format!r} -> {dst_format!r}"
+        )
+    if dst_format == "delta":
+        return f"{src_format}-replication"
+    return f"replication.{src_format}.last-{_COORD[src_format]}"
+
+
+def _direction_keys(src_format: str, dst_format: str, keys) -> list[str]:
+    """Refuse an impossible direction before anything touches disk;
+    returns `keys` as a list (empty for a Hudi source, whose key is
+    self-describing)."""
+    _mark_name(src_format, dst_format)
+    if src_format == "hudi":
+        return []
+    if keys is None:
+        raise ValueError(
+            f"{src_format} -> {dst_format} replication needs `keys`"
+        )
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    if dst_format == "hudi" and len(keys) != 1:
+        raise ValueError(
+            f"a Hudi mirror has one record key; got keys={keys}"
+        )
+    return keys
+
+
+def replicated_mark(dst: str, src_format: str, dst_format: str):
+    """The highest source coordinate already applied to the mirror at
+    `dst` (None for a fresh mirror): a Delta version or Iceberg
+    sequence number as int, a Hudi instant as str. Read from the
+    mirror's own commit coordinate, so snapshot expiry, log
+    checkpoints and archival never re-open the window."""
+    name = _mark_name(src_format, dst_format)
     table = os.path.abspath(dst)
-    if _current_metadata_version(table) is None:
+    if dst_format == "delta":
+        v = last_txn_version(table, name)
+    elif dst_format == "iceberg":
+        if _current_metadata_version(table) is None:
+            return None
+        v = (_load_metadata(table).get("properties") or {}).get(name)
+    else:
+        if not os.path.isdir(_hoodie_dir(table)):
+            return None
+        v = last_commit_mark_hudi(table, name)
+    if v is None:
         return None
-    props = _load_metadata(table).get("properties") or {}
-    v = props.get(_MARK)
-    return int(v) if v is not None else None
+    return str(v) if src_format == "hudi" else int(v)
 
 
-def replicate_delta_to_iceberg(
+def replicate(
     spark: SparkSession,
     src: str,
     dst: str,
-    keys: Sequence[str],
-    end_version: int | None = None,
+    src_format: str,
+    dst_format: str,
+    keys: str | Sequence[str] | None = None,
+    end=None,
 ) -> dict:
-    """Sync the Iceberg mirror at `dst` with every Delta commit of
-    `src` newer than the mirror's recorded high-water mark (module
-    docstring). `keys` identifies rows across commits (latest commit
-    wins inside a batch). Idempotent: re-running after success is a
-    no-op; re-running after a crash replays only the unacknowledged
-    range. Returns {'from_version', 'to_version', 'rows_applied'}."""
+    """Sync the `dst_format` mirror at `dst` with every commit of the
+    `src_format` table at `src` past the mirror's mark, up to `end` (a
+    Delta version, Iceberg sequence number or Hudi instant; default:
+    the latest). `keys` identify rows (latest commit wins inside a
+    batch); a Hudi source reads its record key from hoodie.properties,
+    a Hudi mirror takes exactly one. Idempotent: a re-run after
+    success is a no-op, after a crash it replays only the
+    unacknowledged range. Returns the source's range —
+    from/to_version (Delta, from inclusive), from/to_sequence
+    (Iceberg, from None when nothing is pending) or from/to_instant
+    (Hudi, from = the exclusive mark) — plus the apply engine's
+    counts when a batch was applied."""
+    keys = _direction_keys(src_format, dst_format, keys)
+    last = replicated_mark(dst, src_format, dst_format)
+    pending = {
+        "delta": _delta_pending,
+        "iceberg": _iceberg_pending,
+        "hudi": _hudi_pending,
+    }[src_format]
+    out, end, keys, ups, gone = pending(spark, src, last, end, keys)
+    if ups is None:
+        return out
+    mark = _mark_name(src_format, dst_format)
+    if dst_format == "iceberg":
+        res = apply_cdc_iceberg(
+            spark, dst, gone, ups, keys, properties_update={mark: str(end)}
+        )
+    elif dst_format == "delta":
+        res = apply_cdc_delta(spark, dst, gone, ups, keys, txn=(mark, int(end)))
+    else:
+        res = apply_cdc_hudi(
+            spark, dst, gone, ups, keys[0], extra_metadata={mark: str(end)}
+        )
+    out.update(res)
+    return out
+
+
+def _delta_pending(spark: SparkSession, src: str, last, end, keys):
+    """The latest-wins cut of a Delta source's commits after `last`
+    up to `end`: returns (range, end, keys, upserts, deleted-keys),
+    the frames None when the mirror is caught up."""
     src = os.path.abspath(src)
     latest = _latest_version(src)
     if latest is None:
         raise FileNotFoundError(f"not a Delta table: {src}")
-    end = latest if end_version is None else int(end_version)
-    last = replicated_delta_version(dst)
+    end = latest if end is None else int(end)
     start = 0 if last is None else last + 1
-    out = {"from_version": start, "to_version": end, "rows_applied": 0}
+    out = {"from_version": start, "to_version": end}
     if start > end:
-        return out
-    ups, gone = _delta_pending(spark, src, start, end, keys)
-    res = apply_cdc_iceberg(
-        spark,
-        dst,
-        gone,
-        ups,
-        list(keys),
-        properties_update={_MARK: str(end)},
-    )
-    out["rows_applied"] = res.get("rows_inserted", 0)
-    return out
-
-
-def _delta_pending(
-    spark: SparkSession,
-    src: str,
-    start: int,
-    end: int,
-    keys: Sequence[str],
-):
-    """The latest-wins cut of a Delta source's commits in
-    [start, end]: returns (upserts, deleted-keys) frames — the shared
-    front half of every Delta-sourced mirror direction."""
-    meta_src, _active, _txns = _snapshot_actions(src)
-    cdf_on = (
-        str((meta_src.get("configuration") or {}).get(
-            "delta.enableChangeDataFeed", ""
-        )).lower()
-        == "true"
-    )
-    if cdf_on:
+        return out, end, keys, None, None
+    conf = _snapshot_actions(src)[0].get("configuration") or {}
+    if str(conf.get("delta.enableChangeDataFeed", "")).lower() == "true":
         # full-fidelity CDC: deletes and update images replicate
         changes = read_delta_cdf(spark, src, start, end)
         # latest-wins per key: newest commit first, and within a
@@ -184,52 +220,14 @@ def _delta_pending(
             .drop("__rn", "_commit_version")
         )
         gone = ups.select(*keys).limit(0)
-    return ups, gone
+    return out, end, keys, ups, gone
 
 
-_ICE_APP_ID = "iceberg-replication"
-
-
-def replicated_iceberg_sequence(dst: str) -> int | None:
-    """The highest source SEQUENCE NUMBER already applied to the
-    Delta mirror (None for a fresh mirror) — read from the mirror's
-    `txn` high-water marks, the Delta-native exactly-once coordinate
-    (log checkpoints preserve txn actions, so compaction never
-    re-opens the window)."""
-    from archetype_spark.sources.delta import last_txn_version
-
-    return last_txn_version(os.path.abspath(dst), _ICE_APP_ID)
-
-
-def replicate_iceberg_to_delta(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    keys: Sequence[str],
-    end_sequence: int | None = None,
-) -> dict:
-    """Sync the Delta mirror at `dst` with every Iceberg snapshot of
-    `src` whose sequence number exceeds the mirror's recorded
-    high-water mark (module docstring). `keys` identifies rows across
-    snapshots (latest sequence wins inside a batch; within ONE
-    snapshot an insert outranks its paired equality-delete — the
-    one-commit upsert form). Idempotent: re-running after success is
-    a no-op; re-running after a crash replays only the unacknowledged
-    range. Returns {'from_sequence', 'to_sequence'} plus the apply
-    engine's counts ('rows_inserted' on bootstrap; 'rows_deleted'/
-    'files_updated'/'files_added' on incremental syncs — counting the
-    upsert ROWS would re-evaluate the changelog scan, so the engine
-    reports what the commit physically did instead).
-
-    Scale shape: each sync scans the changed rows (plus one prior-
-    snapshot scan per equality-delete snapshot — the documented cost
-    of recovering value-form kills), shuffles once on `keys` for the
-    latest-wins cut, and commits O(batch) to the mirror: deletion-
-    vector masks for dead/updated keys, new data files for upserts.
-    """
-    from archetype_spark.sources.delta import apply_cdc_delta
-    from archetype_spark.sources.iceberg import read_iceberg_changes
-
+def _iceberg_pending(spark: SparkSession, src: str, last, end, keys):
+    """The latest-wins cut of an Iceberg source's snapshots with
+    sequence number in (last, end], as _delta_pending. Cost: the
+    changed rows plus one prior-snapshot scan per equality-delete
+    snapshot (recovering value-form kills), one shuffle on `keys`."""
     src = os.path.abspath(src)
     if _current_metadata_version(src) is None:
         raise FileNotFoundError(f"not an Iceberg table: {src}")
@@ -243,6 +241,7 @@ def replicate_iceberg_to_delta(
             "monotonic v2 sequence number for its high-water mark "
             "(upgrade the table — any row-delta write does)"
         )
+
     # the spec's v1->v2 upgrade rule: snapshots written before the
     # upgrade have sequence number 0. That prefix is FROZEN (every
     # post-upgrade commit sequences >= 1), so a mark of 0 is exact:
@@ -250,12 +249,7 @@ def replicate_iceberg_to_delta(
     def eff_seq(s: dict) -> int:
         return int(s.get("sequence-number") or 0)
 
-    last = replicated_iceberg_sequence(dst)
-    end = (
-        max(eff_seq(s) for s in snaps)
-        if end_sequence is None
-        else int(end_sequence)
-    )
+    end = max(eff_seq(s) for s in snaps) if end is None else int(end)
     start = -1 if last is None else int(last)
     pending = [s for s in snaps if start < eff_seq(s) <= end]
     out = {
@@ -265,27 +259,7 @@ def replicate_iceberg_to_delta(
         "to_sequence": end,
     }
     if not pending:
-        return out
-    ups, gone = _iceberg_pending(spark, src, snaps, pending, keys)
-    res = apply_cdc_delta(
-        spark, dst, gone, ups, list(keys), txn=(_ICE_APP_ID, end)
-    )
-    out.update(res)
-    return out
-
-
-def _iceberg_pending(
-    spark: SparkSession,
-    src: str,
-    snaps: list[dict],
-    pending: list[dict],
-    keys: Sequence[str],
-):
-    """The latest-wins cut of an Iceberg source's pending snapshots:
-    returns (upserts, deleted-keys) frames — the shared front half of
-    every Iceberg-sourced mirror direction."""
-    from archetype_spark.sources.iceberg import read_iceberg_changes
-
+        return out, end, keys, None, None
     changes = read_iceberg_changes(
         spark,
         src,
@@ -323,40 +297,23 @@ def _iceberg_pending(
         "_change_type"
     )
     gone = latest.filter(F.col("_change_type") == "delete").select(*keys)
-    return ups, gone
+    return out, end, keys, ups, gone
 
 
-_HUDI_APP_ID = "hudi-replication"
-_HUDI_MARK = "replication.hudi.last-instant"
-
-
-def _hudi_pending(
-    spark: SparkSession,
-    src: str,
-    last: str | None,
-    end_instant: str | None,
-):
-    """Shared Hudi-source preamble: resolve the sync range against
-    the source timeline and build the latest-wins cut of upserts +
-    deleted keys. Returns (end, key, ups, gone) — ups/gone are None
-    when the mirror is already caught up."""
-    from archetype_spark.sources.hudi import (
-        _load_properties,
-        hudi_timeline,
-        read_hudi_changes,
-        read_hudi_deleted_keys,
-    )
-
+def _hudi_pending(spark: SparkSession, src: str, last, end, _keys):
+    """The latest-wins cut of a Hudi source's instants in (last, end],
+    as _delta_pending; the keys are the table's record key."""
     src = os.path.abspath(src)
     key = _load_properties(src)["hoodie.table.recordkey.fields"]
     timeline = hudi_timeline(src)
     if not timeline:
         raise FileNotFoundError(f"Hudi table has no completed commits: {src}")
-    end = timeline[-1] if end_instant is None else str(end_instant)
+    end = timeline[-1] if end is None else str(end)
     if end not in timeline:
         raise ValueError(f"end instant {end!r} is not a completed instant")
+    out = {"from_instant": last, "to_instant": end}
     if last is not None and last >= end:
-        return end, key, None, None
+        return out, end, [key], None, None
     ups_raw = read_hudi_changes(
         spark, src, begin_instant=last, end_instant=end
     )
@@ -380,205 +337,4 @@ def _hudi_pending(
     )
     ups = latest.filter(F.col("__pri") == 2).select(*data_cols)
     gone = latest.filter(F.col("__pri") == 1).select(key)
-    return end, key, ups, gone
-
-
-def replicated_hudi_instant_delta(dst: str) -> str | None:
-    """The highest source instant already applied to the Delta
-    mirror (None for a fresh mirror) — from the mirror's `txn`
-    high-water marks (instants are 17-digit numerics, so the int
-    round-trip is exact)."""
-    from archetype_spark.sources.delta import last_txn_version
-
-    v = last_txn_version(os.path.abspath(dst), _HUDI_APP_ID)
-    return str(v) if v is not None else None
-
-
-def replicate_hudi_to_delta(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    end_instant: str | None = None,
-) -> dict:
-    """Sync a Delta mirror at `dst` with every Hudi instant of `src`
-    newer than the mirror's recorded high-water mark. The record key
-    comes from the source's hoodie.properties (self-describing);
-    upserts ride `read_hudi_changes` (O(new data)), deletes ride
-    `read_hudi_deleted_keys` (O(deletes + rewritten groups)), one
-    latest-wins shuffle on the key collapses the batch, and
-    `apply_cdc_delta` lands it as ONE deletion-vector commit stamped
-    with the protocol's `txn` action — exactly-once, idempotent on
-    crash-and-retry. Returns {'from_instant', 'to_instant'} plus the
-    apply engine's counts."""
-    last = replicated_hudi_instant_delta(dst)
-    end, key, ups, gone = _hudi_pending(spark, src, last, end_instant)
-    out = {"from_instant": last, "to_instant": end}
-    if ups is None:
-        return out
-    from archetype_spark.sources.delta import apply_cdc_delta
-
-    res = apply_cdc_delta(
-        spark, dst, gone, ups, [key], txn=(_HUDI_APP_ID, int(end))
-    )
-    out.update(res)
-    return out
-
-
-def replicated_hudi_instant_iceberg(dst: str) -> str | None:
-    """The highest source instant already applied to the Iceberg
-    mirror (None for a fresh mirror) — from the mirror's table
-    properties, the same atomic-commit coordinate as the Delta->
-    Iceberg direction."""
-    table = os.path.abspath(dst)
-    if _current_metadata_version(table) is None:
-        return None
-    props = _load_metadata(table).get("properties") or {}
-    return props.get(_HUDI_MARK)
-
-
-def replicate_hudi_to_iceberg(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    end_instant: str | None = None,
-) -> dict:
-    """Sync an Iceberg mirror at `dst` with every Hudi instant of
-    `src` newer than the mirror's recorded high-water mark — the
-    Iceberg face of replicate_hudi_to_delta: the batch lands as ONE
-    v2 row-delta snapshot (equality-delete file + data files) with
-    the mark in the same atomic metadata commit."""
-    last = replicated_hudi_instant_iceberg(dst)
-    end, key, ups, gone = _hudi_pending(spark, src, last, end_instant)
-    out = {"from_instant": last, "to_instant": end}
-    if ups is None:
-        return out
-    res = apply_cdc_iceberg(
-        spark, dst, gone, ups, [key], properties_update={_HUDI_MARK: end}
-    )
-    out.update(res)
-    return out
-
-
-def replicated_delta_version_hudi(dst: str) -> int | None:
-    """The highest Delta source commit version already applied to the
-    Hudi mirror (None for a fresh mirror) — from commit extraMetadata,
-    the coordinate the CDC-stream sink also uses."""
-    from archetype_spark.sources.hudi import (
-        _hoodie_dir,
-        last_commit_mark_hudi,
-    )
-
-    table = os.path.abspath(dst)
-    if not os.path.isdir(_hoodie_dir(table)):
-        return None
-    v = last_commit_mark_hudi(table, _MARK)
-    return int(v) if v is not None else None
-
-
-def replicate_delta_to_hudi(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    record_key: str,
-    end_version: int | None = None,
-) -> dict:
-    """Sync a Hudi mirror at `dst` with every Delta commit of `src`
-    newer than the mirror's recorded high-water mark — the direction
-    that completes the tri-format mesh alongside Delta->Iceberg and
-    the Hudi-sourced faces. The same CDF latest-wins cut feeds
-    apply_cdc_hudi (deletes as a delete-block/rewrite commit, upserts
-    as an upsert commit carrying the mark); idempotent on
-    crash-and-retry because the half-applied batch replays
-    identically. Returns {'from_version', 'to_version'} plus the
-    apply engine's counts."""
-    from archetype_spark.sources.hudi import apply_cdc_hudi
-
-    src = os.path.abspath(src)
-    latest = _latest_version(src)
-    if latest is None:
-        raise FileNotFoundError(f"not a Delta table: {src}")
-    end = latest if end_version is None else int(end_version)
-    last = replicated_delta_version_hudi(dst)
-    start = 0 if last is None else last + 1
-    out = {"from_version": start, "to_version": end}
-    if start > end:
-        return out
-    ups, gone = _delta_pending(spark, src, start, end, [record_key])
-    res = apply_cdc_hudi(
-        spark, dst, gone, ups, record_key,
-        extra_metadata={_MARK: str(end)},
-    )
-    out.update(res)
-    return out
-
-
-def replicated_iceberg_sequence_hudi(dst: str) -> int | None:
-    """The highest Iceberg source sequence number already applied to
-    the Hudi mirror (None for a fresh mirror)."""
-    from archetype_spark.sources.hudi import (
-        _hoodie_dir,
-        last_commit_mark_hudi,
-    )
-
-    table = os.path.abspath(dst)
-    if not os.path.isdir(_hoodie_dir(table)):
-        return None
-    v = last_commit_mark_hudi(table, "replication.iceberg.last-sequence")
-    return int(v) if v is not None else None
-
-
-def replicate_iceberg_to_hudi(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    record_key: str,
-    end_sequence: int | None = None,
-) -> dict:
-    """Sync a Hudi mirror at `dst` with every Iceberg snapshot of
-    `src` whose sequence number exceeds the mirror's recorded
-    high-water mark — the last edge of the six-direction mesh. The
-    same changelog latest-wins cut as the Delta direction feeds
-    apply_cdc_hudi; v1 sources refuse (no monotonic coordinate), the
-    same contract as replicate_iceberg_to_delta."""
-    from archetype_spark.sources.hudi import apply_cdc_hudi
-
-    src = os.path.abspath(src)
-    if _current_metadata_version(src) is None:
-        raise FileNotFoundError(f"not an Iceberg table: {src}")
-    meta = _load_metadata(src)
-    snaps = meta.get("snapshots") or []
-    if not snaps:
-        raise FileNotFoundError(f"no snapshots in Iceberg table {src}")
-    if int(meta.get("format-version", 1)) < 2:
-        raise NotImplementedError(
-            f"Iceberg source {src} is format v1: replication needs the "
-            "monotonic v2 sequence number for its high-water mark "
-            "(upgrade the table — any row-delta write does)"
-        )
-
-    def eff_seq(s: dict) -> int:
-        return int(s.get("sequence-number") or 0)
-
-    last = replicated_iceberg_sequence_hudi(dst)
-    end = (
-        max(eff_seq(s) for s in snaps)
-        if end_sequence is None
-        else int(end_sequence)
-    )
-    start = -1 if last is None else int(last)
-    pending = [s for s in snaps if start < eff_seq(s) <= end]
-    out = {
-        "from_sequence": (
-            min(eff_seq(s) for s in pending) if pending else None
-        ),
-        "to_sequence": end,
-    }
-    if not pending:
-        return out
-    ups, gone = _iceberg_pending(spark, src, snaps, pending, [record_key])
-    res = apply_cdc_hudi(
-        spark, dst, gone, ups, record_key,
-        extra_metadata={"replication.iceberg.last-sequence": str(end)},
-    )
-    out.update(res)
-    return out
+    return out, end, [key], ups, gone

@@ -17,8 +17,8 @@ watermarks, event-time windows, or late-data handling (SURVEY §2.2,
   micro-batches.
 - lake_source.py: the lake formats as STREAMING SOURCES — a file
   stream over each table's commit log triggering the idempotent
-  batch replication faces, so a continuous cross-format mirror is
-  readStream -> foreachBatch(replicate_*), exactly-once via the
+  batch replication face, so a continuous cross-format mirror is
+  readStream -> foreachBatch(replicate), exactly-once via the
   mirror's own mark.
 """
 

@@ -10,8 +10,8 @@ renaming a new file into its log directory (Delta `_delta_log/*.json`,
 Iceberg `metadata/v*.metadata.json`, Hudi completed-instant files in
 `.hoodie/`), so a file stream over that directory yields exactly the
 "a new commit landed" signal, checkpointable and trigger-paced by the
-engine. The micro-batch body then calls the existing batch face
-(`replicate_delta_to_iceberg` & the other five directions), which
+engine. The micro-batch body then calls the batch face
+(`sources.replicate.replicate`, any of the six directions), which
 resolves everything pending past the MIRROR's high-water mark and
 applies it as one marked commit.
 
@@ -36,14 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from archetype_spark.sources.replicate import (
-    replicate_delta_to_hudi,
-    replicate_delta_to_iceberg,
-    replicate_hudi_to_delta,
-    replicate_hudi_to_iceberg,
-    replicate_iceberg_to_delta,
-    replicate_iceberg_to_hudi,
-)
+from archetype_spark.sources.replicate import _direction_keys, replicate
 
 #: per-format commit-log location + the glob matching ONLY completed
 #: instants (atomically renamed into place): Hudi inflight/requested
@@ -88,31 +81,6 @@ def read_lake_commits_stream(
     )
 
 
-#: (src_format, dst_format) -> the batch face; `key` is the record
-#: key / join key (ignored by the Hudi-sourced faces, whose key is
-#: self-describing from hoodie.properties).
-_DIRECTIONS = {
-    ("delta", "iceberg"): lambda spark, src, dst, key: (
-        replicate_delta_to_iceberg(spark, src, dst, [key])
-    ),
-    ("delta", "hudi"): lambda spark, src, dst, key: (
-        replicate_delta_to_hudi(spark, src, dst, key)
-    ),
-    ("iceberg", "delta"): lambda spark, src, dst, key: (
-        replicate_iceberg_to_delta(spark, src, dst, [key])
-    ),
-    ("iceberg", "hudi"): lambda spark, src, dst, key: (
-        replicate_iceberg_to_hudi(spark, src, dst, record_key=key)
-    ),
-    ("hudi", "delta"): lambda spark, src, dst, key: (
-        replicate_hudi_to_delta(spark, src, dst)
-    ),
-    ("hudi", "iceberg"): lambda spark, src, dst, key: (
-        replicate_hudi_to_iceberg(spark, src, dst)
-    ),
-}
-
-
 def stream_replicate(
     spark: SparkSession,
     src: str,
@@ -134,23 +102,15 @@ def stream_replicate(
     replays at most one already-applied range, which the mirror mark
     turns into a no-op — the exactly-once contract is the FACE's,
     the stream only schedules it."""
-    if (src_format, dst_format) not in _DIRECTIONS:
-        raise ValueError(
-            f"no replication direction {src_format!r} -> {dst_format!r}"
-        )
-    if key is None and src_format != "hudi":
-        raise ValueError(
-            f"{src_format} -> {dst_format} replication needs `key`"
-        )
+    keys = _direction_keys(src_format, dst_format, key)
     src = os.path.abspath(src)
     dst = os.path.abspath(dst)
-    sync = _DIRECTIONS[(src_format, dst_format)]
     stream = read_lake_commits_stream(spark, src, src_format)
 
     def apply_batch(batch_df, batch_id):
         # rows are commit-log lines; only the TRIGGER matters — the
         # face resolves the actual pending range from the mirror mark
-        sync(spark, src, dst, key)
+        replicate(spark, src, dst, src_format, dst_format, keys)
 
     w = stream.writeStream.foreachBatch(apply_batch)
     if checkpoint is not None:

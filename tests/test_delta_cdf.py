@@ -17,6 +17,7 @@ from archetype_spark.sources import (
     delete_where_delta,
     read_delta,
     read_iceberg,
+    snapshots_iceberg,
     update_where_delta,
     vacuum_delta,
     write_delta,
@@ -141,16 +142,13 @@ def test_cdf_composes_with_column_mapping(spark, tmp_path, people):
 def test_replication_propagates_deletes_from_cdf_source(
     spark, tmp_path, people
 ):
-    from archetype_spark.sources.replicate import (
-        replicate_delta_to_iceberg,
-        replicated_delta_version,
-    )
+    from archetype_spark.sources.replicate import replicate, replicated_mark
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     write_delta(people, src)
     enable_cdf_delta(src)
-    replicate_delta_to_iceberg(spark, src, dst, ["id"])
+    replicate(spark, src, dst, "delta", "iceberg", ["id"])
     assert sorted(
         r["id"] for r in read_iceberg(spark, dst).collect()
     ) == [1, 2, 3]
@@ -164,18 +162,20 @@ def test_replication_propagates_deletes_from_cdf_source(
         src,
         mode="append",
     )
-    out = replicate_delta_to_iceberg(spark, src, dst, ["id"])
-    assert out["rows_applied"] == 2  # the update image + the insert
+    out = replicate(spark, src, dst, "delta", "iceberg", ["id"])
+    assert out["rows_inserted"] == 2  # the update image + the insert
     got = sorted(tuple(r) for r in read_iceberg(spark, dst).collect())
     assert got == [
         (2, "BOB", "us"),  # updated, not duplicated
         (3, "cho", "jp"),  # untouched
         (4, "dee", "de"),  # inserted
     ]  # id=1 DELETED from the mirror
-    assert replicated_delta_version(dst) == 4
-    # idempotent
-    again = replicate_delta_to_iceberg(spark, src, dst, ["id"])
-    assert again["rows_applied"] == 0
+    assert replicated_mark(dst, "delta", "iceberg") == 4
+    # idempotent: a no-op makes no mirror commit
+    n_snaps = len(snapshots_iceberg(dst))
+    again = replicate(spark, src, dst, "delta", "iceberg", ["id"])
+    assert again == {"from_version": 5, "to_version": 4}
+    assert len(snapshots_iceberg(dst)) == n_snaps
     assert len(read_iceberg(spark, dst).collect()) == 3
 
 
@@ -183,7 +183,7 @@ def test_delete_then_reinsert_same_key_in_range(spark, tmp_path, people):
     """A key deleted and re-inserted inside one replication range must
     land in its FINAL state (alive), not deleted — the latest-wins cut
     ordered by commit version."""
-    from archetype_spark.sources.replicate import replicate_delta_to_iceberg
+    from archetype_spark.sources.replicate import replicate
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -197,7 +197,7 @@ def test_delete_then_reinsert_same_key_in_range(spark, tmp_path, people):
         src,
         mode="append",
     )
-    replicate_delta_to_iceberg(spark, src, dst, ["id"])
+    replicate(spark, src, dst, "delta", "iceberg", ["id"])
     got = {r["id"]: r["name"] for r in read_iceberg(spark, dst).collect()}
     assert got == {1: "ann2", 2: "bob", 3: "cho"}
     # and the inverse: inserted then deleted -> absent
@@ -209,7 +209,7 @@ def test_delete_then_reinsert_same_key_in_range(spark, tmp_path, people):
         mode="append",
     )
     delete_where_delta(spark, src, "id = 9")
-    replicate_delta_to_iceberg(spark, src, dst, ["id"])
+    replicate(spark, src, dst, "delta", "iceberg", ["id"])
     assert 9 not in {
         r["id"] for r in read_iceberg(spark, dst).collect()
     }

@@ -31,11 +31,7 @@ from archetype_spark.sources.iceberg import (
     upsert_by_key_iceberg,
     write_iceberg,
 )
-from archetype_spark.sources.replicate import (
-    replicate_delta_to_iceberg,
-    replicate_hudi_to_delta,
-    replicate_iceberg_to_hudi,
-)
+from archetype_spark.sources.replicate import replicate
 from archetype_spark.streaming import stream_replicate
 
 _DDL = "id long, name string, v long"
@@ -70,7 +66,7 @@ def _rows(df):
 def test_delta_stream_equals_batch(spark, tmp_path):
     src = _delta_src(spark, str(tmp_path / "src"))
     batch_dst = str(tmp_path / "batch")
-    replicate_delta_to_iceberg(spark, src, batch_dst, ["id"])
+    replicate(spark, src, batch_dst, "delta", "iceberg", ["id"])
     stream_dst = str(tmp_path / "stream")
     q = stream_replicate(
         spark, src, stream_dst, "delta", "iceberg", key="id",
@@ -105,7 +101,7 @@ def test_iceberg_stream_equals_batch(spark, tmp_path):
         spark, src, spark.createDataFrame([(1,)], "id long")
     )
     batch_dst = str(tmp_path / "batch")
-    replicate_iceberg_to_hudi(spark, src, batch_dst, record_key="id")
+    replicate(spark, src, batch_dst, "iceberg", "hudi", "id")
     stream_dst = str(tmp_path / "stream")
     q = stream_replicate(
         spark, src, stream_dst, "iceberg", "hudi", key="id",
@@ -136,7 +132,7 @@ def test_hudi_stream_equals_batch(spark, tmp_path):
     )
     delete_by_key_hudi(spark, src, spark.createDataFrame([(1,)], "id long"))
     batch_dst = str(tmp_path / "batch")
-    replicate_hudi_to_delta(spark, src, batch_dst)
+    replicate(spark, src, batch_dst, "hudi", "delta")
     stream_dst = str(tmp_path / "stream")
     q = stream_replicate(
         spark, src, stream_dst, "hudi", "delta",

@@ -31,9 +31,13 @@ def test_every_oracle_gated_query_is_inside_driver_window():
 
 def test_deferred_names_are_oracle_gated_and_real():
     """Deferral only makes sense for oracle-gated queries; a stale name
-    here would silently shrink the window's occupancy."""
-    assert _DEFERRED <= set(all_oracles()), _DEFERRED - set(all_oracles())
-    n_oracled = len(set(all_queries()) & set(all_oracles()))
+    here would silently shrink the window's occupancy. Checked against
+    the full oracle set: with the live-index gate, index-backed
+    oracles vanish on a checkout without a built sf0.01 index, which
+    says nothing about whether the deferred names are real."""
+    oracles = set(all_oracles(require_live_index=False))
+    assert _DEFERRED <= oracles, _DEFERRED - oracles
+    n_oracled = len(set(all_queries()) & oracles)
     assert n_oracled - len(_DEFERRED) <= DRIVER_WINDOW
 
 

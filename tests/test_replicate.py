@@ -1,9 +1,10 @@
-"""Cross-format CDC replication (sources/replicate.py): Delta source
-commits applied to an Iceberg mirror as one equality-delete upsert
-per sync, exactly-once via the mirror's table-property high-water
-mark. Pins: bootstrap, O(changes) incremental sync, idempotent
-re-run, latest-wins across a multi-commit batch, overwrite handling,
-crash-window replay, and the loud refusal on source deletes."""
+"""Cross-format CDC replication (sources/replicate.py): all six
+directions of the Delta/Iceberg/Hudi mesh through `replicate`, each
+exactly-once via the mirror's own high-water mark (`replicated_mark`).
+Pins: direction refusals, bootstrap, O(changes) incremental sync,
+idempotent re-run, latest-wins across a multi-commit batch, overwrite
+handling, crash-window replay, and the loud refusal on source
+deletes."""
 
 from __future__ import annotations
 
@@ -13,12 +14,10 @@ from pyspark.sql import functions as F
 from archetype_spark.sources import (
     delete_where_delta,
     read_iceberg,
+    snapshots_iceberg,
     write_delta,
 )
-from archetype_spark.sources.replicate import (
-    replicate_delta_to_iceberg,
-    replicated_delta_version,
-)
+from archetype_spark.sources.replicate import replicate, replicated_mark
 
 
 @pytest.fixture()
@@ -44,20 +43,53 @@ def _mirror_rows(spark, dst):
     return sorted(tuple(r) for r in read_iceberg(spark, dst).collect())
 
 
+@pytest.mark.parametrize(
+    "src_format, dst_format, keys, match",
+    [
+        ("delta", "delta", ["id"], "direction"),
+        ("hudi", "hudi", None, "direction"),
+        ("delta", "parquet", ["id"], "direction"),
+        ("orc", "iceberg", ["id"], "direction"),
+        ("delta", "iceberg", None, "keys"),
+        ("iceberg", "hudi", None, "keys"),
+        ("iceberg", "hudi", ["a", "b"], "one record key"),
+    ],
+)
+def test_bad_direction_refuses_before_touching_disk(
+    tmp_path, src_format, dst_format, keys, match
+):
+    """Same-format, unknown-format and key-less directions refuse with
+    ValueError before any table is read or written — no Spark session
+    is needed to reach the refusal, and the mirror path stays absent."""
+    from archetype_spark.streaming import stream_replicate
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    with pytest.raises(ValueError, match=match):
+        replicate(None, src, dst, src_format, dst_format, keys)
+    with pytest.raises(ValueError, match=match):
+        stream_replicate(None, src, dst, src_format, dst_format, keys)
+    if match == "direction":
+        with pytest.raises(ValueError, match=match):
+            replicated_mark(dst, src_format, dst_format)
+    assert not (tmp_path / "dst").exists()
+
+
 def test_bootstrap_and_incremental_sync(spark, tmp_path, src_people):
     dst = str(tmp_path / "dst")
-    out = replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
-    assert out == {"from_version": 0, "to_version": 1, "rows_applied": 3}
-    assert replicated_delta_version(dst) == 1
+    out = replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
+    assert (out["from_version"], out["to_version"]) == (0, 1)
+    assert out["rows_inserted"] == 3
+    assert replicated_mark(dst, "delta", "iceberg") == 1
     assert _mirror_rows(spark, dst) == [
         (1, "ann", 10),
         (2, "bob", 20),
         (3, "cho", 30),
     ]
-    # idempotent: nothing new -> no-op
-    again = replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
-    assert again["rows_applied"] == 0
-    assert replicated_delta_version(dst) == 1
+    # idempotent: nothing new -> no-op, no mirror commit
+    again = replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
+    assert again == {"from_version": 2, "to_version": 1}
+    assert len(snapshots_iceberg(dst)) == 1
+    assert replicated_mark(dst, "delta", "iceberg") == 1
     # incremental: one more source commit moves only its rows
     write_delta(
         spark.createDataFrame(
@@ -66,8 +98,9 @@ def test_bootstrap_and_incremental_sync(spark, tmp_path, src_people):
         src_people,
         mode="append",
     )
-    inc = replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
-    assert inc == {"from_version": 2, "to_version": 2, "rows_applied": 1}
+    inc = replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
+    assert (inc["from_version"], inc["to_version"]) == (2, 2)
+    assert inc["rows_inserted"] == 1
     assert len(_mirror_rows(spark, dst)) == 4
 
 
@@ -81,8 +114,8 @@ def test_latest_wins_across_commits_and_overwrite(spark, tmp_path, src_people):
         src_people,
         mode="append",
     )
-    out = replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
-    assert out["rows_applied"] == 3  # 3 distinct keys, latest rows
+    out = replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
+    assert out["rows_inserted"] == 3  # 3 distinct keys, latest rows
     assert _mirror_rows(spark, dst) == [
         (1, "ann2", 11),
         (2, "bob", 20),
@@ -94,7 +127,7 @@ def test_latest_wins_across_commits_and_overwrite(spark, tmp_path, src_people):
         "id long, name string, v long",
     ).coalesce(1)
     write_delta(full, src_people, mode="overwrite")
-    replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
+    replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
     assert _mirror_rows(spark, dst) == [
         (1, "ann3", 12),
         (2, "bob", 20),
@@ -104,24 +137,26 @@ def test_latest_wins_across_commits_and_overwrite(spark, tmp_path, src_people):
 
 def test_partial_range_then_catchup(spark, tmp_path, src_people):
     dst = str(tmp_path / "dst")
-    out = replicate_delta_to_iceberg(
-        spark, src_people, dst, ["id"], end_version=0
+    out = replicate(
+        spark, src_people, dst, "delta", "iceberg", ["id"], end=0
     )
-    assert out == {"from_version": 0, "to_version": 0, "rows_applied": 2}
-    assert replicated_delta_version(dst) == 0
-    out2 = replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
-    assert out2 == {"from_version": 1, "to_version": 1, "rows_applied": 1}
+    assert (out["from_version"], out["to_version"]) == (0, 0)
+    assert out["rows_inserted"] == 2
+    assert replicated_mark(dst, "delta", "iceberg") == 0
+    out2 = replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
+    assert (out2["from_version"], out2["to_version"]) == (1, 1)
+    assert out2["rows_inserted"] == 1
     assert len(_mirror_rows(spark, dst)) == 3
 
 
 def test_source_deletes_refuse(spark, tmp_path, src_people):
     dst = str(tmp_path / "dst")
-    replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
+    replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
     delete_where_delta(spark, src_people, "id = 2")
     with pytest.raises(NotImplementedError):
-        replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
+        replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
     # the refusal left the mark untouched: nothing was applied
-    assert replicated_delta_version(dst) == 1
+    assert replicated_mark(dst, "delta", "iceberg") == 1
     assert len(_mirror_rows(spark, dst)) == 3
 
 
@@ -152,7 +187,7 @@ def test_upsert_commit_insert_outranks_its_paired_delete(spark, tmp_path):
     )
     upsert_by_key_delta(spark, src, ups, ["id"])
     dst = str(tmp_path / "dst")
-    replicate_delta_to_iceberg(spark, src, dst, ["id"])
+    replicate(spark, src, dst, "delta", "iceberg", ["id"])
     rows = {r["id"]: (r["name"], r["v"]) for r in read_iceberg(spark, dst).collect()}
     assert len(rows) == n  # every key live — none lost to its paired delete
     for i in range(n):
@@ -163,10 +198,8 @@ def test_upsert_commit_insert_outranks_its_paired_delete(spark, tmp_path):
 
 
 def test_mirror_history_time_travels_per_sync(spark, tmp_path, src_people):
-    from archetype_spark.sources import snapshots_iceberg
-
     dst = str(tmp_path / "dst")
-    replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
+    replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
     write_delta(
         spark.createDataFrame(
             [(1, "annX", 99)], "id long, name string, v long"
@@ -174,7 +207,7 @@ def test_mirror_history_time_travels_per_sync(spark, tmp_path, src_people):
         src_people,
         mode="append",
     )
-    replicate_delta_to_iceberg(spark, src_people, dst, ["id"])
+    replicate(spark, src_people, dst, "delta", "iceberg", ["id"])
     snaps = snapshots_iceberg(dst)
     assert len(snaps) == 2  # one mirror snapshot per sync
     first = snaps[0]["snapshot-id"]
@@ -231,15 +264,10 @@ def _delta_rows(spark, dst):
 
 
 def test_reverse_bootstrap_full_history(spark, tmp_path, src_ice):
-    from archetype_spark.sources.replicate import (
-        replicate_iceberg_to_delta,
-        replicated_iceberg_sequence,
-    )
-
     dst = str(tmp_path / "delta_dst")
-    out = replicate_iceberg_to_delta(spark, src_ice, dst, ["id"])
+    out = replicate(spark, src_ice, dst, "iceberg", "delta", ["id"])
     assert (out["from_sequence"], out["to_sequence"]) == (0, 3)
-    assert replicated_iceberg_sequence(dst) == 3
+    assert replicated_mark(dst, "iceberg", "delta") == 3
     # the resurrected key 2 (re-append after its equality delete) and
     # the one-commit upsert of key 3 must both land in their newest
     # state; key 1 untouched, key 4 plain insert
@@ -250,7 +278,7 @@ def test_reverse_bootstrap_full_history(spark, tmp_path, src_ice):
         (4, "dee", 40),
     ]
     # idempotent no-op
-    again = replicate_iceberg_to_delta(spark, src_ice, dst, ["id"])
+    again = replicate(spark, src_ice, dst, "iceberg", "delta", ["id"])
     assert again["from_sequence"] is None
     assert _delta_rows(spark, dst) == [
         (1, "ann", 10),
@@ -265,23 +293,19 @@ def test_reverse_partial_range_then_catchup(spark, tmp_path, src_ice):
     the txn mark scopes the second sync to the unacknowledged tail,
     and a delete that arrives in that tail propagates."""
     from archetype_spark.sources.iceberg import delete_by_key_iceberg
-    from archetype_spark.sources.replicate import (
-        replicate_iceberg_to_delta,
-        replicated_iceberg_sequence,
-    )
 
     dst = str(tmp_path / "delta_dst")
-    out1 = replicate_iceberg_to_delta(
-        spark, src_ice, dst, ["id"], end_sequence=1
+    out1 = replicate(
+        spark, src_ice, dst, "iceberg", "delta", ["id"], end=1
     )
     assert (out1["from_sequence"], out1["to_sequence"]) == (0, 1)
-    assert replicated_iceberg_sequence(dst) == 1
+    assert replicated_mark(dst, "iceberg", "delta") == 1
     assert _delta_rows(spark, dst) == [(1, "ann", 10), (3, "cho", 30)]
     # a fresh delete lands in the un-replicated tail (seq 4)
     delete_by_key_iceberg(
         spark, src_ice, spark.createDataFrame([(4,)], "id long")
     )
-    out2 = replicate_iceberg_to_delta(spark, src_ice, dst, ["id"])
+    out2 = replicate(spark, src_ice, dst, "iceberg", "delta", ["id"])
     assert (out2["from_sequence"], out2["to_sequence"]) == (2, 4)
     assert _delta_rows(spark, dst) == [
         (1, "ann", 10),
@@ -293,15 +317,10 @@ def test_reverse_partial_range_then_catchup(spark, tmp_path, src_ice):
 def test_reverse_mirror_equals_source_via_roundtrip(spark, tmp_path, src_ice):
     """The two directions compose: Iceberg -> Delta mirror -> Iceberg
     mirror-of-mirror equals the original source state."""
-    from archetype_spark.sources.replicate import (
-        replicate_delta_to_iceberg,
-        replicate_iceberg_to_delta,
-    )
-
     mid = str(tmp_path / "delta_mid")
     back = str(tmp_path / "ice_back")
-    replicate_iceberg_to_delta(spark, src_ice, mid, ["id"])
-    replicate_delta_to_iceberg(spark, mid, back, ["id"])
+    replicate(spark, src_ice, mid, "iceberg", "delta", ["id"])
+    replicate(spark, mid, back, "delta", "iceberg", ["id"])
     assert _mirror_rows(spark, back) == sorted(
         tuple(r) for r in read_iceberg(spark, src_ice).collect()
     )
@@ -309,7 +328,6 @@ def test_reverse_mirror_equals_source_via_roundtrip(spark, tmp_path, src_ice):
 
 def test_reverse_refuses_v1_source(spark, tmp_path):
     from archetype_spark.sources.iceberg import write_iceberg
-    from archetype_spark.sources.replicate import replicate_iceberg_to_delta
 
     src = str(tmp_path / "v1_src")
     write_iceberg(
@@ -317,9 +335,7 @@ def test_reverse_refuses_v1_source(spark, tmp_path):
         src,
     )
     with pytest.raises(NotImplementedError, match="format v1"):
-        replicate_iceberg_to_delta(
-            spark, src, str(tmp_path / "d"), ["id"]
-        )
+        replicate(spark, src, str(tmp_path / "d"), "iceberg", "delta", ["id"])
 
 
 # --------------------------------------------------- Hudi as the CDC source
@@ -357,26 +373,22 @@ def test_hudi_to_delta_bootstrap_upserts_deletes(
         delete_by_key_hudi,
         upsert_hudi,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_hudi_to_delta,
-        replicated_hudi_instant_delta,
-    )
 
     src = _hudi_src(spark, tmp_path, table_type=ttype)
     dst = str(tmp_path / "dmirror")
-    out = replicate_hudi_to_delta(spark, src, dst)
+    out = replicate(spark, src, dst, "hudi", "delta")
     assert out["rows_inserted"] == 3
     # idempotent re-run is a no-op
-    again = replicate_hudi_to_delta(spark, src, dst)
+    again = replicate(spark, src, dst, "hudi", "delta")
     assert "rows_inserted" not in again and "rows_deleted" not in again
     # source keeps moving: update 2, insert 4, delete 1
     upsert_hudi(spark, src, _hupd(spark, [(2, "bob2", 21), (4, "dee", 40)]))
     delete_by_key_hudi(spark, src, spark.createDataFrame([(1,)], "id long"))
-    out2 = replicate_hudi_to_delta(spark, src, dst)
+    out2 = replicate(spark, src, dst, "hudi", "delta")
     assert out2["from_instant"] == out["to_instant"]
     got = sorted(tuple(r) for r in read_delta(spark, dst).collect())
     assert got == [(2, "bob2", 21), (3, "cho", 30), (4, "dee", 40)]
-    assert replicated_hudi_instant_delta(dst) == out2["to_instant"]
+    assert replicated_mark(dst, "hudi", "delta") == out2["to_instant"]
 
 
 @pytest.mark.parametrize("ttype", ["COPY_ON_WRITE", "MERGE_ON_READ"])
@@ -389,14 +401,10 @@ def test_hudi_to_iceberg_mirror_follows(spark, tmp_path, ttype):
         delete_by_key_hudi,
         upsert_hudi,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_hudi_to_iceberg,
-        replicated_hudi_instant_iceberg,
-    )
 
     src = _hudi_src(spark, tmp_path, table_type=ttype)
     dst = str(tmp_path / "imirror")
-    replicate_hudi_to_iceberg(spark, src, dst)
+    replicate(spark, src, dst, "hudi", "iceberg")
     assert _mirror_rows(spark, dst) == [
         (1, "ann", 10), (2, "bob", 20), (3, "cho", 30)
     ]
@@ -404,11 +412,11 @@ def test_hudi_to_iceberg_mirror_follows(spark, tmp_path, ttype):
     delete_by_key_hudi(spark, src, spark.createDataFrame([(2,)], "id long"))
     upsert_hudi(spark, src, _hupd(spark, [(2, "bob3", 22)]))
     delete_by_key_hudi(spark, src, spark.createDataFrame([(3,)], "id long"))
-    out = replicate_hudi_to_iceberg(spark, src, dst)
+    out = replicate(spark, src, dst, "hudi", "iceberg")
     assert _mirror_rows(spark, dst) == [(1, "ann", 10), (2, "bob3", 22)]
-    assert replicated_hudi_instant_iceberg(dst) == out["to_instant"]
+    assert replicated_mark(dst, "hudi", "iceberg") == out["to_instant"]
     # replay-idempotence: a third sync applies nothing
-    assert replicate_hudi_to_iceberg(spark, src, dst).get(
+    assert replicate(spark, src, dst, "hudi", "iceberg").get(
         "rows_deleted"
     ) is None
 
@@ -456,15 +464,11 @@ def test_delta_to_hudi_mirror_follows(spark, tmp_path, src_people):
         enable_cdf_delta,
         upsert_by_key_delta,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_delta_to_hudi,
-        replicated_delta_version_hudi,
-    )
 
     src, dst = src_people, str(tmp_path / "hmirror")
-    out = replicate_delta_to_hudi(spark, src, dst, record_key="id")
+    out = replicate(spark, src, dst, "delta", "hudi", "id")
     assert out.get("rows_inserted") == 3
-    assert replicate_delta_to_hudi(spark, src, dst, record_key="id")[
+    assert replicate(spark, src, dst, "delta", "hudi", "id")[
         "from_version"
     ] == out["to_version"] + 1  # no-op re-run
     enable_cdf_delta(src)
@@ -477,11 +481,11 @@ def test_delta_to_hudi_mirror_follows(spark, tmp_path, src_people):
         ),
         ["id"],
     )
-    out2 = replicate_delta_to_hudi(spark, src, dst, record_key="id")
+    out2 = replicate(spark, src, dst, "delta", "hudi", "id")
     assert _hudi_mirror_rows(spark, dst) == [
         (2, "bob2", 21), (3, "cho", 30), (4, "dee", 40)
     ]
-    assert replicated_delta_version_hudi(dst) == out2["to_version"]
+    assert replicated_mark(dst, "delta", "hudi") == out2["to_version"]
 
 
 def test_iceberg_to_hudi_mirror_follows(spark, tmp_path, src_ice):
@@ -492,13 +496,9 @@ def test_iceberg_to_hudi_mirror_follows(spark, tmp_path, src_ice):
         delete_by_key_iceberg,
         upsert_by_key_iceberg,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_iceberg_to_hudi,
-        replicated_iceberg_sequence_hudi,
-    )
 
     src, dst = src_ice, str(tmp_path / "hmirror2")
-    replicate_iceberg_to_hudi(spark, src, dst, record_key="id")
+    replicate(spark, src, dst, "iceberg", "hudi", "id")
     assert _hudi_mirror_rows(spark, dst) == [
         (1, "ann", 10), (2, "bob2", 21), (3, "cho2", 31), (4, "dee", 40)
     ]
@@ -514,12 +514,12 @@ def test_iceberg_to_hudi_mirror_follows(spark, tmp_path, src_ice):
     delete_by_key_iceberg(
         spark, src, spark.createDataFrame([(3,)], "id long")
     )
-    out = replicate_iceberg_to_hudi(spark, src, dst, record_key="id")
+    out = replicate(spark, src, dst, "iceberg", "hudi", "id")
     got = _hudi_mirror_rows(spark, dst)
     assert (2, "bob3", 22) in got and all(r[0] != 3 for r in got)
-    assert replicated_iceberg_sequence_hudi(dst) == out["to_sequence"]
+    assert replicated_mark(dst, "iceberg", "hudi") == out["to_sequence"]
     # replay-idempotence
-    again = replicate_iceberg_to_hudi(spark, src, dst, record_key="id")
+    again = replicate(spark, src, dst, "iceberg", "hudi", "id")
     assert again["from_sequence"] is None
 
 
@@ -535,7 +535,6 @@ def test_v3_dv_supersede_keeps_reinserted_row_live(spark, tmp_path):
         upgrade_iceberg,
         write_iceberg,
     )
-    from archetype_spark.sources.replicate import replicate_iceberg_to_delta
 
     src, dst = str(tmp_path / "v3src"), str(tmp_path / "v3dst")
     write_iceberg(
@@ -554,5 +553,5 @@ def test_v3_dv_supersede_keeps_reinserted_row_live(spark, tmp_path):
         src,
     )  # genuine re-insert
     delete_where_iceberg(spark, src, F.col("id") == 2)  # supersede DV
-    replicate_iceberg_to_delta(spark, src, dst, ["id"])
+    replicate(spark, src, dst, "iceberg", "delta", ["id"])
     assert _delta_rows(spark, dst) == [(1, "ann2", 11), (3, "cho", 30)]

@@ -64,6 +64,41 @@ def test_derive_query_terms_is_df_ordered_tie_by_token(spark, tiny_docs):
     assert got == [("alpha", 3), ("beta", 2), ("gamma", 2)]
 
 
+@pytest.mark.parametrize("tok", ["a\\bc", "abc\\"])
+def test_bm25_literal_fold_escapes_backslash(spark, tok):
+    """The derived-terms path folds df into a SQL CASE string; a token
+    holding a backslash must score exactly as on the broadcast-join
+    path (`terms` passed in). Unescaped, `a\\bc` read as a different
+    string (its df NULL, its score silently dropped) and a trailing
+    `abc\\` did not parse."""
+    docs = spark.createDataFrame(
+        [
+            (1, f"{tok} plain word"),
+            (2, f"{tok} {tok} it's"),
+            (3, "plain it's more"),
+            (4, f"word {tok}"),
+        ],
+        "doc_id long, text string",
+    )
+    terms = retrieval.derive_query_terms(docs)
+    assert tok in {r["token"] for r in terms.collect()}
+    joined = sorted(tuple(r) for r in retrieval.bm25_scores(docs, terms).collect())
+    folded = sorted(tuple(r) for r in retrieval.bm25_scores(docs).collect())
+    assert folded == joined
+    assert all(r[2] is not None for r in folded)
+
+
+def test_bm25_id_column_needing_quotes(spark, tiny_docs):
+    """An id column whose name is not a bare SQL identifier (`doc id`)
+    scores like `doc_id`: the scoring selectExpr quotes it."""
+    renamed = tiny_docs.withColumnRenamed("doc_id", "doc id")
+    got = retrieval.bm25_scores(renamed, id_col="doc id")
+    assert "doc id" in got.columns
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in retrieval.bm25_scores(tiny_docs).collect()
+    )
+
+
 def test_rrf_fusion_handles_one_sided_ids(spark):
     lex = spark.createDataFrame([(1, 1), (2, 2)], "doc_id long, rank_lex int")
     sem = spark.createDataFrame([(2, 1), (3, 2)], "doc_id long, rank_sem int")

@@ -568,10 +568,7 @@ def test_stress_lake_relay(spark, stress_docs, tmp_path):
     from archetype_spark.sources.delta import enable_cdf_delta, read_delta
     from archetype_spark.sources.hudi import read_hudi
     from archetype_spark.sources.iceberg import read_iceberg
-    from archetype_spark.sources.replicate import (
-        replicate_delta_to_hudi,
-        replicate_hudi_to_iceberg,
-    )
+    from archetype_spark.sources.replicate import replicate
 
     src = str(tmp_path / "dsrc")
     hm, im = str(tmp_path / "hm"), str(tmp_path / "im")
@@ -581,13 +578,13 @@ def test_stress_lake_relay(spark, stress_docs, tmp_path):
     write_delta(base.repartition("lang"), src, partition_by=["lang"])
     enable_cdf_delta(src)
     # hop 1+2 bootstrap mid-history
-    replicate_delta_to_hudi(spark, src, hm, record_key="doc_id")
-    replicate_hudi_to_iceberg(spark, hm, im)
+    replicate(spark, src, hm, "delta", "hudi", "doc_id")
+    replicate(spark, hm, im, "hudi", "iceberg")
     delete_where_delta(spark, src, "n_chars % 7 = 3")
     update_where_delta(spark, src, "n_chars % 11 = 5", {"lang": "'xx'"})
     # incremental catch-up through both hops
-    replicate_delta_to_hudi(spark, src, hm, record_key="doc_id")
-    replicate_hudi_to_iceberg(spark, hm, im)
+    replicate(spark, src, hm, "delta", "hudi", "doc_id")
+    replicate(spark, hm, im, "hudi", "iceberg")
 
     def state(df):
         return sorted(
@@ -755,10 +752,7 @@ def test_stress_reverse_replication_chain(spark, stress_docs, tmp_path):
         delete_by_key_iceberg,
         upsert_by_key_iceberg,
     )
-    from archetype_spark.sources.replicate import (
-        replicate_iceberg_to_delta,
-        replicated_iceberg_sequence,
-    )
+    from archetype_spark.sources.replicate import replicate, replicated_mark
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -776,8 +770,8 @@ def test_stress_reverse_replication_chain(spark, stress_docs, tmp_path):
             ["doc_id"],
         )
     # first sync: ingest + 3 upserts (sequences 0..3)
-    replicate_iceberg_to_delta(spark, src, dst, ["doc_id"])
-    assert replicated_iceberg_sequence(dst) == 3
+    replicate(spark, src, dst, "iceberg", "delta", ["doc_id"])
+    assert replicated_mark(dst, "iceberg", "delta") == 3
     for i in range(3, 6):
         upsert_by_key_iceberg(
             spark,
@@ -791,7 +785,7 @@ def test_stress_reverse_replication_chain(spark, stress_docs, tmp_path):
         spark, src, base.filter(F.col("doc_id") % 37 == 6).select("doc_id")
     )
     # catch-up sync: only the unacknowledged tail replays
-    out = replicate_iceberg_to_delta(spark, src, dst, ["doc_id"])
+    out = replicate(spark, src, dst, "iceberg", "delta", ["doc_id"])
     assert out["from_sequence"] == 4
     mirror = read_delta(spark, dst)
     source = read_iceberg(spark, src)
@@ -1039,10 +1033,7 @@ def test_stress_hudi_archive_replication_mesh(spark, stress_docs, tmp_path):
         write_hudi,
     )
     from archetype_spark.sources.iceberg import read_iceberg
-    from archetype_spark.sources.replicate import (
-        replicate_hudi_to_delta,
-        replicate_hudi_to_iceberg,
-    )
+    from archetype_spark.sources.replicate import replicate
 
     t = str(tmp_path / "src")
     dm, im = str(tmp_path / "dm"), str(tmp_path / "im")
@@ -1065,8 +1056,8 @@ def test_stress_hudi_archive_replication_mesh(spark, stress_docs, tmp_path):
         spark, t, base.filter(F.col("doc_id") % 37 == 3).select("doc_id")
     )
     # mid-history bootstrap of both mirrors
-    replicate_hudi_to_delta(spark, t, dm)
-    replicate_hudi_to_iceberg(spark, t, im)
+    replicate(spark, t, dm, "hudi", "delta")
+    replicate(spark, t, im, "hudi", "iceberg")
     before = read_hudi(spark, t).agg(
         F.count(F.lit(1)), F.sum("n_chars")
     ).first()
@@ -1087,8 +1078,8 @@ def test_stress_hudi_archive_replication_mesh(spark, stress_docs, tmp_path):
     delete_by_key_hudi(
         spark, t, base.filter(F.col("doc_id") % 37 == 5).select("doc_id")
     )
-    replicate_hudi_to_delta(spark, t, dm)
-    replicate_hudi_to_iceberg(spark, t, im)
+    replicate(spark, t, dm, "hudi", "delta")
+    replicate(spark, t, im, "hudi", "iceberg")
     src_state = (
         read_hudi(spark, t)
         .groupBy("lang")
