@@ -15,7 +15,11 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("archetype-spark-tests", master="local[32]", shuffle_partitions=32)
+    """local[$SPARK_GRAFT_CPUS] with as many shuffle partitions (all
+    cores when unset): a fixed local[32] on a 4-core host ran 30+
+    Python workers at a load average of 26 and pushed the default lane
+    past its time limit."""
+    s = get_spark("archetype-spark-tests")
     yield s
 
 
