@@ -49,7 +49,6 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,23 +121,6 @@ def corpus_fingerprint(emb: DataFrame, id_col: str, vec_col: str) -> dict:
     return {"mode": "content", "n_rows": row["n"], "sig": f"{row['h1']}:{row['h2']}"}
 
 
-@contextmanager
-def _cached_for_fits(df: DataFrame):
-    """Hold `df` in the block cache across the MLlib k-means fits that
-    re-scan it. Every fit runs its k-means|| init sampling and summary
-    over its input; uncached, each of those jobs replays the input's
-    fan-out shuffle (and, for residuals, the cell-assignment joins):
-    the five fits of a 10-vector IVF_PQ build took 207 s uncached and
-    19 s cached (local[32] on a 4-vCPU host). Released as soon as the
-    fits end: the lazy frames built on `df` (assignments, encode)
-    recompute from the plan when written."""
-    df.persist()
-    try:
-        yield df
-    finally:
-        df.unpersist()
-
-
 # ----------------------------------------------------------------- fit (IVF)
 def fit_ivf_frames(
     emb: DataFrame,
@@ -160,8 +142,7 @@ def fit_ivf_frames(
         emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     ).withColumn("_features", array_to_vector(F.col("v").cast("array<double>")))
     km = KMeans(k=n_clusters, seed=seed, featuresCol="_features", predictionCol="cell")
-    with _cached_for_fits(base):
-        model = km.fit(base)
+    model = km.fit(base)
     assignments = model.transform(base).select("id", F.col("cell").cast("int").alias("cell"))
     centroids = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -685,17 +666,16 @@ def fit_pq_frames(
         )
     )
     rows = []
-    with _cached_for_fits(base):
-        for sub in range(m):
-            feats = base.withColumn(
-                "_features", array_to_vector(F.slice("v", sub * ds + 1, ds))
-            )
-            model = KMeans(
-                k=n_codes, seed=seed + sub, featuresCol="_features", predictionCol="_c"
-            ).fit(feats)
-            for code, c in enumerate(model.clusterCenters()):
-                cf = [float(x) for x in c]
-                rows.append((sub, code, cf, [_micro(x) for x in cf]))
+    for sub in range(m):
+        feats = base.withColumn(
+            "_features", array_to_vector(F.slice("v", sub * ds + 1, ds))
+        )
+        model = KMeans(
+            k=n_codes, seed=seed + sub, featuresCol="_features", predictionCol="_c"
+        ).fit(feats)
+        for code, c in enumerate(model.clusterCenters()):
+            cf = [float(x) for x in c]
+            rows.append((sub, code, cf, [_micro(x) for x in cf]))
     codebook = spark.createDataFrame(
         rows,
         schema="m int, code int, centroid array<double>, centroid_micro array<bigint>",
@@ -952,17 +932,16 @@ def fit_ivf_pq_frames(
     )
     resid = base.withColumn("r", F.zip_with("v", "_c", lambda a, b: a - b))
     rows = []
-    with _cached_for_fits(resid):
-        for sub in range(m):
-            feats = resid.withColumn(
-                "_features", array_to_vector(F.slice("r", sub * ds + 1, ds))
-            )
-            model = KMeans(
-                k=n_codes, seed=seed + sub, featuresCol="_features", predictionCol="_c2"
-            ).fit(feats)
-            for code, c in enumerate(model.clusterCenters()):
-                cf = [float(x) for x in c]
-                rows.append((sub, code, cf, [_micro(x) for x in cf]))
+    for sub in range(m):
+        feats = resid.withColumn(
+            "_features", array_to_vector(F.slice("r", sub * ds + 1, ds))
+        )
+        model = KMeans(
+            k=n_codes, seed=seed + sub, featuresCol="_features", predictionCol="_c2"
+        ).fit(feats)
+        for code, c in enumerate(model.clusterCenters()):
+            cf = [float(x) for x in c]
+            rows.append((sub, code, cf, [_micro(x) for x in cf]))
     codebook = spark.createDataFrame(
         rows,
         schema="m int, code int, centroid array<double>, centroid_micro array<bigint>",

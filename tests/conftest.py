@@ -15,11 +15,11 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    """local[$SPARK_GRAFT_CPUS] with as many shuffle partitions (all
-    cores when unset): a fixed local[32] on a 4-core host ran 30+
-    Python workers at a load average of 26 and pushed the default lane
-    past its time limit."""
-    s = get_spark("archetype-spark-tests")
+    """local[$SPARK_GRAFT_CPUS] (all cores when unset) with 32 shuffle
+    partitions on every host. A fixed local[32] on a 4-core host ran
+    30+ Python workers at a load average of 26 and pushed the default
+    lane past its time limit; fan_out follows the master's cores."""
+    s = get_spark("archetype-spark-tests", shuffle_partitions=32)
     yield s
 
 
