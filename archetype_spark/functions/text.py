@@ -3,19 +3,13 @@
 Everything here is a native Column expression (split/transform/
 sequence/regexp) — JVM-side, codegen'd, shuffle-free per row. The
 corpus `documents.text` is single-space-separated tokens, so the
-canonical tokenizer is `split(text, ' ')`; a BPE-ish regex tokenizer
-is provided for free-form text.
+canonical tokenizer is `split(text, ' ')`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# GPT-2-style pre-tokenizer family, simplified to RE2/Java-compatible
-# syntax: word pieces with leading space, numbers, punctuation runs.
-BPEISH_PATTERN = r"( ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+)"
-
 
 def tokens(text: Column | str, sep: str = " ") -> Column:
     """Whitespace tokens (corpus canonical form)."""
@@ -24,16 +18,6 @@ def tokens(text: Column | str, sep: str = " ") -> Column:
 
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
-
-
-def bpeish_tokens(text: Column | str) -> Column:
-    """Regex pre-tokenization approximating a BPE tokenizer's word
-    split; useful for stable token-count estimates on free-form text."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.filter(
-        F.regexp_extract_all(t, F.lit(BPEISH_PATTERN), 1),
-        lambda x: F.trim(x) != "",
-    )
 
 
 def shingles(text: Column | str, n: int = 3) -> Column:

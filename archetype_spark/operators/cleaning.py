@@ -102,7 +102,6 @@ def dedup_paragraphs(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    winner: str = "agg",
 ) -> DataFrame:
     """Corpus-wide paragraph-level dedup keeping the FIRST occurrence
     (RefinedWeb/MassiveText-style): split documents into paragraphs,
@@ -144,24 +143,11 @@ def dedup_paragraphs(
         )
         .withColumn("_h", F.xxhash64("_para"))
     )
-    if winner == "window":
-        # A/B-only alternative (`bench.py --ab q84`): one shuffle and
-        # one text scan, but the per-key row_number buffers every
-        # occurrence of a hot paragraph in a single task — the shape
-        # the default deliberately avoids. Kept for measurement, not
-        # production.
-        from pyspark.sql import Window
-
-        win = Window.partitionBy("_h").orderBy("_id", "_pos")
-        flagged = paras.withColumn("_keep", F.row_number().over(win) == 1)
-    else:
-        winner_tbl = paras.groupBy("_h").agg(
-            F.min(F.struct("_id", "_pos")).alias("_w")
-        )
-        flagged = paras.join(winner_tbl, "_h").withColumn(
-            "_keep",
-            (F.col("_id") == F.col("_w._id")) & (F.col("_pos") == F.col("_w._pos")),
-        )
+    winner_tbl = paras.groupBy("_h").agg(F.min(F.struct("_id", "_pos")).alias("_w"))
+    flagged = paras.join(winner_tbl, "_h").withColumn(
+        "_keep",
+        (F.col("_id") == F.col("_w._id")) & (F.col("_pos") == F.col("_w._pos")),
+    )
     kept = F.when(F.col("_keep"), F.struct("_pos", "_para"))
     return (
         flagged.groupBy("_id")

@@ -248,26 +248,15 @@ def dedup_clusters(
     id_col: str = "doc_id",
     src_col: str = "doc_id",
     dst_col: str = "other_doc_id",
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Canonical cluster assignment for EVERY id in `ids`: docs in no
     pair are their own singleton cluster; paired docs get the min id
     of their transitive component. Returns (id_col, cluster_id,
     is_keeper) — is_keeper marks the one doc per cluster a dedup
     pipeline retains (the deterministic min-id keeper policy, same as
-    hash_dedup's).
-
-    algorithm: 'minlabel' (default — diameter rounds with automatic
-    star fallback) or 'star' (star contraction from round one; the
-    `bench.py --ab q66` harness times the two against each other in
-    one JVM)."""
-    if algorithm == "star":
-        comp = star_contraction_components(pairs, src_col, dst_col)
-    elif algorithm == "minlabel":
-        comp = connected_components(pairs, src_col, dst_col)
-    else:
-        raise ValueError(f"algorithm must be 'minlabel' or 'star', got {algorithm!r}")
-    comp = comp.withColumnRenamed("node", id_col)
+    hash_dedup's). The components come from connected_components
+    (min-label rounds, star contraction past its round budget)."""
+    comp = connected_components(pairs, src_col, dst_col).withColumnRenamed("node", id_col)
     return (
         ids.select(id_col)
         .join(comp, id_col, "left")

@@ -238,18 +238,18 @@ def span_corruption(
     like the chunker. Its sentinel prefix-count re-filters a growing
     slice per MASKED block (`when()` short-circuits the unmasked
     ones), so the asymptotic cost is O(mask_pct·blocks²) cheap
-    boolean ops — measured same-JVM (BASELINE.md r8) this beats both
-    an F.aggregate prefix-scan fold (`numbering="prefix_scan"`,
-    linear lambda calls but O(blocks²) array-append copies) up to at
-    least 96k-token documents. For book-length inputs use
-    `numbering="exploded"`: blocks are exploded to rows, the
-    sentinel index is a per-doc running-sum window (the q68 shape —
-    partitioned by doc, never global), and the document is
-    reassembled with an array_sort'd collect_list; truly linear at
-    the price of one exchange. All three are row-identical
-    (`bench.py --ab q93`)."""
-    if numbering not in ("narrow", "prefix_scan", "exploded"):
+    boolean ops. For book-length inputs use `numbering="exploded"`:
+    blocks are exploded to rows, the sentinel index is a per-doc
+    running-sum window (the q68 shape — partitioned by doc, never
+    global), and the document is reassembled with an array_sort'd
+    collect_list; truly linear at the price of one exchange. Both
+    are row-identical (`bench.py --ab q93`)."""
+    if numbering not in ("narrow", "exploded"):
         raise ValueError(f"unknown numbering {numbering!r}")
+    if numbering == "exploded":
+        return _span_corruption_exploded(
+            df, id_col, text_col, span_tokens, mask_pct
+        )
     from archetype_spark.operators.sampling import hash_bucket
 
     w = F.split(F.col(text_col), " ")
@@ -257,32 +257,13 @@ def span_corruption(
     key = lambda b: F.concat_ws(  # noqa: E731
         ":", F.col(id_col).cast("string"), b.cast("string")
     )
-    if numbering == "exploded":
-        return _span_corruption_exploded(
-            df, id_col, text_col, span_tokens, mask_pct
-        )
     flags = F.transform(
         F.sequence(F.lit(1), nb), lambda b: hash_bucket(key(b)) < mask_pct
     )
     out = df.withColumn("_w", w).withColumn("_f", flags)
-    if numbering == "prefix_scan":
-        # _p[b] == count of masked blocks among blocks 1..b-1 (the
-        # sentinel index for block b): one linear fold, seeded [0].
-        out = out.withColumn(
-            "_p",
-            F.aggregate(
-                F.col("_f"),
-                F.array(F.lit(0)),
-                lambda acc, x: F.concat(
-                    acc, F.array(F.element_at(acc, -1) + x.cast("int"))
-                ),
-            ),
-        )
-        prefix_masked = lambda b: F.element_at("_p", b)  # noqa: E731
-    else:
-        prefix_masked = lambda b: F.size(  # noqa: E731
-            F.filter(F.slice("_f", 1, b - 1), lambda x: x)
-        )
+    prefix_masked = lambda b: F.size(  # noqa: E731
+        F.filter(F.slice("_f", 1, b - 1), lambda x: x)
+    )
     sentinel = lambda b: F.concat(  # noqa: E731
         F.lit("<extra_id_"), prefix_masked(b).cast("string"), F.lit(">")
     )

@@ -238,7 +238,6 @@ def signcode_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     auto_max_bytes: int | None = None,
-    strategy: str = "group_gemm",
 ) -> DataFrame:
     """Sign-code banded ANN: the projection's downstream purpose,
     end-to-end. The vector projects to n_bands * code_bits integer
@@ -254,12 +253,14 @@ def signcode_topk(
     Returns (vec_id, rank, other_vec_id, cos_sim) — the q30 schema,
     restricted to banded candidates.
 
-    Scale: the candidate join keys on (band, code) — an equi-join
-    whose bucket population is ~n / 2^code_bits per band (size the
-    bits to the corpus); pair dedup across bands is a distinct on the
-    8-byte id pair; scoring joins key on vector ids (shuffle joins,
-    no broadcast of the corpus); ranking is a per-vector window over
-    candidate rows only. The projection adds no exchange."""
+    Scale: candidates group on (band, code) — a bucket population of
+    ~n / 2^code_bits per band (size the bits to the corpus), each
+    bucket one BLAS product that emits only per-member top-(k within
+    margin) pairs; pair dedup across bands is a distinct on the
+    8-byte id pair; scoring attaches vectors by id (broadcast while
+    the corpus fits the similarity budget, shuffle joins past it);
+    ranking is a per-vector window over candidate rows only. The
+    projection adds no exchange."""
     proj = random_sign_projection(
         emb, id_col, vec_col, k=n_bands * code_bits, seed=seed
     )
@@ -295,54 +296,21 @@ def signcode_topk(
         AUTO_BROADCAST_MAX_BYTES if auto_max_bytes is None else auto_max_bytes
     )
     est = _estimate_build_bytes(emb, vec_col)
-    if strategy == "group_gemm":
-        # Per-bucket GEMM candidates (r16): attach the vector to each
-        # coded row and run one BLAS product per (band, code) bucket,
-        # emitting only per-member top-(k within margin) pairs — the
-        # executed pairwise plan scored EVERY same-bucket pair in the
-        # JVM (~pop^2/2 per bucket; 465k exact folds at sf0.1) when
-        # the downstream window can only ever keep k of them. Shuffle
-        # volume becomes one vector copy per band instead of one row
-        # per candidate pair (smaller whenever buckets hold more than
-        # ~2*n_bands members); exactness is the merge property + the
-        # margin-superset argument (_band_gemm_candidates docstring).
-        evec = emb.select(
-            F.col(id_col).alias("_eid"), F.col(vec_col).alias("_v")
-        )
-        if est <= budget:
-            evec = F.broadcast(evec)
-        coded_vec = coded.join(evec, F.col("_id") == F.col("_eid"))
-        cand = _band_gemm_candidates(
-            coded_vec, k=k, margin=GEMM_MARGIN
-        ).dropDuplicates()
-    else:
-        # Exchange barrier on the band join key (the
-        # minhash_pairs_from_signatures pattern): both self-join
-        # aliases otherwise re-run the integer-GEMM projection stage;
-        # with the barrier they read ONE computed exchange, already
-        # partitioned the way the candidate join needs it.
-        coded = coded.repartition(
-            emb.sparkSession.sparkContext.defaultParallelism,
-            F.col("_band"),
-            F.col("_code"),
-        )
-        a, b = coded.alias("a"), coded.alias("b")
-        # UNORDERED candidates (a < b): halves the dedup exchange and
-        # the scoring work; cosine is symmetric, so the directed view
-        # needed for per-vector ranking is a cheap post-score mirror
-        # union.
-        cand = (
-            a.join(
-                b,
-                (F.col("a._band") == F.col("b._band"))
-                & (F.col("a._code") == F.col("b._code"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(
-                F.col("a._id").alias("_cand_a"), F.col("b._id").alias("_cand_b")
-            )
-            .dropDuplicates()
-        )
+    # Per-bucket GEMM candidates (r16): attach the vector to each
+    # coded row and run one BLAS product per (band, code) bucket,
+    # emitting only per-member top-(k within margin) pairs — a
+    # (band, code) self-join scored EVERY same-bucket pair in the JVM
+    # (~pop^2/2 per bucket; 465k exact folds at sf0.1) when the
+    # downstream window can only ever keep k of them. Shuffle volume
+    # is one vector copy per band instead of one row per candidate
+    # pair (smaller whenever buckets hold more than ~2*n_bands
+    # members); exactness is the merge property + the margin-superset
+    # argument (_band_gemm_candidates docstring).
+    evec = emb.select(F.col(id_col).alias("_eid"), F.col(vec_col).alias("_v"))
+    if est <= budget:
+        evec = F.broadcast(evec)
+    coded_vec = coded.join(evec, F.col("_id") == F.col("_eid"))
+    cand = _band_gemm_candidates(coded_vec, k=k, margin=GEMM_MARGIN).dropDuplicates()
     # Re-rank through the shared budget-gated broadcast scorer (the
     # GEMM tier's funnel): candidate rows carry only two 8-byte ids
     # through the shuffle; vectors attach map-side from the broadcast

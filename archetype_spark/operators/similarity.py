@@ -14,8 +14,6 @@ Three tiers:
    broadcast literal array).
 3. `ivf_topk` — k-means coarse quantizer + n_probe cell probing +
    exact re-rank.
-4. `mllib_ann` — MLlib BucketedRandomProjectionLSH wrapper
-   (approxSimilarityJoin) for parity with Spark's built-in ANN.
 
 Both ANN paths take `index_dir`: the quantizer/bucket state is then
 the persisted index built by operators/ann_index.py (fit-once /
@@ -735,7 +733,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     index_dir: str | None = None,
-    verdict_stage: str = "explode_agg",
 ) -> DataFrame:
     """SemDeDup-style embedding-space dedup verdict, blocked by the
     IVF quantizer cells: two vectors are semantic duplicates when they
@@ -743,13 +740,6 @@ def semantic_dedup(
     vector's verdict is (vec_id, cell, n_dups, is_keeper) with
     is_keeper = no same-cell duplicate has a smaller id (deterministic
     min-id keeper, the same canonical policy as hash_dedup).
-
-    `verdict_stage` selects the pairs->verdict formulation for
-    `bench.py --ab q72` (row-identical): "explode_agg" (default —
-    each pair explodes into its two endpoint rows, ONE grouped agg),
-    or "two_joins" (two grouped counts keyed by each endpoint, two
-    left joins — the shape the default's comment rejects; kept
-    registered so drift claims are adjudicated by measurement).
 
     This is the scale path for embedding dedup that q37's exact
     pairwise tier can't walk: the O(n^2) kernel becomes per-cell
@@ -763,8 +753,6 @@ def semantic_dedup(
     recall-vs-cost is the quantizer's k knob; planted-duplicate and
     exact-tier-consistency tests live in
     tests/test_decontam_semdedup.py."""
-    if verdict_stage not in ("explode_agg", "two_joins"):
-        raise ValueError(f"unknown verdict_stage {verdict_stage!r}")
     from archetype_spark.operators import ann_index
 
     if index_dir is not None:
@@ -800,25 +788,6 @@ def semantic_dedup(
         )
         .filter(F.col("_cos") >= threshold)
     )
-    if verdict_stage == "two_joins":
-        ca = pairs.groupBy(F.col("_ida").alias("_id")).agg(
-            F.count(F.lit(1)).alias("_ca")
-        )
-        cb = pairs.groupBy(F.col("_idb").alias("_id")).agg(
-            F.count(F.lit(1)).alias("_cb")
-        )
-        return (
-            asg.join(ca, "_id", "left")
-            .join(cb, "_id", "left")
-            .select(
-                F.col("_id").alias(id_col),
-                F.col("cell"),
-                (F.coalesce(F.col("_ca"), F.lit(0)) + F.coalesce(F.col("_cb"), F.lit(0)))
-                .cast("bigint")
-                .alias("n_dups"),
-                (F.coalesce(F.col("_cb"), F.lit(0)) == 0).alias("is_keeper"),
-            )
-        )
     # one shuffle for both verdict inputs: each pair EXPLODES into its
     # two endpoint rows (same plan branch — a union of two selects
     # over `pairs` would evaluate the within-cell cosine join twice),
@@ -842,45 +811,6 @@ def semantic_dedup(
         F.col("cell"),
         F.coalesce(F.col("_nd"), F.lit(0)).cast("bigint").alias("n_dups"),
         (F.coalesce(F.col("_ns"), F.lit(0)) == 0).alias("is_keeper"),
-    )
-
-
-def mllib_ann_pairs(
-    emb: DataFrame,
-    threshold_euclidean: float,
-    bucket_length: float = 2.0,
-    num_tables: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """MLlib BucketedRandomProjectionLSH approxSimilarityJoin (pairs
-    within a Euclidean distance). Kept as an alternative engine-native
-    ANN; our LSH above avoids the Vector conversion cost."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.select(
-        F.col(id_col).alias("id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_tables,
-        seed=seed,
-    )
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, threshold_euclidean, distCol="dist")
-    return (
-        joined.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("vec_id"),
-            F.col("datasetB.id").alias("other_vec_id"),
-            F.round("dist", 6).alias("dist"),
-        )
-        .orderBy("vec_id", "other_vec_id")
     )
 
 

@@ -64,22 +64,6 @@ def doc_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     )
 
 
-def lang_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Stopword-hit counts per (doc, lang) as columns score_<lang>.
-    Computed as one pass over the token array per language — a
-    codegen'd filter/size, no explode, no shuffle."""
-    toks = F.split(F.col(text_col), " ")
-    cols = [F.col(id_col)]
-    for lang in LANGS:
-        sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        cols.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).alias(
-                f"score_{lang}"
-            )
-        )
-    return df.select(*cols)
-
-
 def pred_lang_col(text_col: str = "text") -> F.Column:
     """Predicted-language COLUMN: argmax stopword hits over the text,
     ties by lang code ascending, zero hits everywhere -> 'unknown'.
@@ -349,7 +333,6 @@ def bigram_surprisal(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    score_distinct: bool = False,
 ) -> DataFrame:
     """Corpus-trained bigram surprisal scoring — the engine-side
     analog of perplexity filtering (CCNet trains KenLM; here the
@@ -403,43 +386,16 @@ def bigram_surprisal(
     s_int = round_like_duckdb(
         -F.log((F.col("_cab") + 1) / (F.col("_ca") + F.col("_v"))) * 1e6, 0
     ).cast("bigint")
-    if score_distinct:
-        # A/B alternative (`bench.py --ab q89`): pre-aggregate term
-        # frequency per (doc, a, b), score each DISTINCT pair once on
-        # the count table, and weight by tf — the ln evaluates
-        # ~n_distinct_pairs times instead of once per occurrence, and
-        # the probe join carries the smaller doc-bigram table. Row
-        # results are identical by construction (sum of s per
-        # occurrence == s * tf).
-        dtf = grams.groupBy("_id", "_a", "_b").agg(
-            F.count(F.lit(1)).alias("_tf")
-        )
-        pair_scores = (
-            cab.join(ca, "_a")
-            .crossJoin(F.broadcast(v))
-            .select("_a", "_b", s_int.alias("_s"))
-        )
-        per_doc = (
-            dtf.join(pair_scores, ["_a", "_b"])
-            .groupBy("_id")
-            .agg(
-                F.sum("_tf").cast("bigint").alias("n_bigrams"),
-                F.sum(F.col("_s") * F.col("_tf"))
-                .cast("bigint")
-                .alias("sum_micro_nats"),
-            )
-        )
-    else:
-        scored = (
-            grams.join(cab, ["_a", "_b"])
-            .join(ca, "_a")
-            .crossJoin(F.broadcast(v))
-            .select("_id", s_int.alias("_s"))
-        )
-        per_doc = scored.groupBy("_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.sum("_s").cast("bigint").alias("sum_micro_nats"),
-        )
+    scored = (
+        grams.join(cab, ["_a", "_b"])
+        .join(ca, "_a")
+        .crossJoin(F.broadcast(v))
+        .select("_id", s_int.alias("_s"))
+    )
+    per_doc = scored.groupBy("_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
+        F.sum("_s").cast("bigint").alias("sum_micro_nats"),
+    )
     return (
         df.select(F.col(id_col).alias("_id"))
         .join(per_doc, "_id", "left")

@@ -59,24 +59,6 @@ def q84_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q84_window_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B-only (`bench.py --ab q84`): q84 with the window row_number
-    winner instead of the struct-MIN aggregate + join — one text scan
-    and one shuffle, but hot-key buffering; the harness quantifies
-    the trade on this corpus. Not registered as a query."""
-    from archetype_spark.operators import cleaning
-
-    d = load(spark, sf_dir, "documents")
-    lined = _chunked(d, 4)
-    deduped = cleaning.dedup_paragraphs(lined, winner="window")
-    return deduped.select(
-        "doc_id",
-        "n_paras",
-        "n_kept",
-        F.sha2(F.col("text"), 256).alias("clean_sha"),
-    ).orderBy("doc_id")
-
-
 def q85_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic sign random projection (operators/projections.py
     random_sign_projection): 64-dim float vectors to 8 integer
@@ -790,70 +772,25 @@ ORACLES = {
 }
 
 
-# Same-JVM A/B pairs (`bench.py --ab q84`): registered into the
-# shared northstar registry; one-way import, no cycle (northstar
-# never imports this module).
+# Same-JVM A/B pairs register into the shared northstar registry;
+# one-way import, no cycle (northstar never imports this module).
 from archetype_spark.queries.northstar import AB_VARIANTS  # noqa: E402
 
-AB_VARIANTS["q84"] = {
-    "agg_join": q84_paragraph_dedup,
-    "window": q84_window_variant,
-}
 
-
-def q91_pairwise_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B-only (`bench.py --ab q91`): q91 scoring EVERY same-bucket
-    pair with the exact JVM fold (the pre-r16 shape) instead of the
-    per-bucket GEMM top-k candidate cut. Rows identical by the merge
-    property + margin-superset argument (projections.py)."""
-    from archetype_spark.operators import projections
-
-    e = load(spark, sf_dir, "embeddings")
-    return projections.signcode_topk(
-        e, k=3, code_bits=4, n_bands=4, seed=0, strategy="pairwise"
-    )
-
-
-AB_VARIANTS["q91"] = {
-    "group_gemm": q91_signcode_topk,
-    "pairwise": q91_pairwise_variant,
-}
-
-
-def q89_distinct_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B-only (`bench.py --ab q89`): q89 with distinct-pair scoring
-    (ln once per distinct bigram, weighted by tf) instead of
-    per-occurrence scoring. Rows identical by construction."""
-    from archetype_spark.operators import textstats
+def _q93_exploded_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q93 with the exploded sentinel numbering (one row per block +
+    a per-doc window) instead of the narrow per-row fold."""
+    from archetype_spark.operators import packing
 
     d = load(spark, sf_dir, "documents")
-    return textstats.bigram_surprisal(d, score_distinct=True).orderBy("doc_id")
-
-
-AB_VARIANTS["q89"] = {
-    "per_occurrence": q89_bigram_surprisal,
-    "distinct_pairs": q89_distinct_variant,
-}
-
-
-def _q93_variant(numbering: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from archetype_spark.operators import packing
-
-        d = load(spark, sf_dir, "documents")
-        out = packing.span_corruption(
-            d, span_tokens=3, mask_pct=15, numbering=numbering
-        )
-        return out.select(
-            "doc_id",
-            "n_blocks",
-            "n_masked",
-            F.sha2(F.col("input_text"), 256).alias("input_sha"),
-            F.sha2(F.col("target_text"), 256).alias("target_sha"),
-        ).orderBy("doc_id")
-
-    run.__name__ = f"q93_{numbering}_variant"
-    return run
+    out = packing.span_corruption(d, span_tokens=3, mask_pct=15, numbering="exploded")
+    return out.select(
+        "doc_id",
+        "n_blocks",
+        "n_masked",
+        F.sha2(F.col("input_text"), 256).alias("input_sha"),
+        F.sha2(F.col("target_text"), 256).alias("target_sha"),
+    ).orderBy("doc_id")
 
 
 # `--ab q93`: sentinel-numbering formulations (row-identical; the
@@ -862,8 +799,7 @@ def _q93_variant(numbering: str):
 # docs, exploded wins >10x from ~30k tokens).
 AB_VARIANTS["q93"] = {
     "narrow": q93_span_corruption,
-    "prefix_scan": _q93_variant("prefix_scan"),
-    "exploded": _q93_variant("exploded"),
+    "exploded": _q93_exploded_variant,
 }
 
 # q92's oracle needs northstar's stopword VALUES literal, available

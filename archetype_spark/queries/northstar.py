@@ -3572,29 +3572,13 @@ def q66_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.dedup_clusters(docs, pairs, id_col="doc_id").orderBy("doc_id")
 
 
-def q66_star_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q66 with the closure swapped to star contraction from round
-    one — the B side of `bench.py --ab q66` (same rows, different
-    round algebra; the harness asserts equality before timing)."""
-    from archetype_spark.operators import graph
-
-    docs = load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    return graph.dedup_clusters(docs, pairs, id_col="doc_id", algorithm="star").orderBy(
-        "doc_id"
-    )
-
-
 #: Same-JVM A/B pairs for `bench.py --ab <name>`: label -> callable,
 #: first entry is the production path. Cross-session single numbers
 #: carry 20-40% noise (BASELINE.md), so regression claims about these
 #: operators should come from this harness, not from protocol deltas.
-AB_VARIANTS = {
-    "q66": {"minlabel": q66_dedup_clusters, "star": q66_star_variant},
-}
-# q72's variant pair is appended after its definition below.
-# curation_q appends its own variant pairs at import time (one-way
-# dependency: curation_q -> northstar, never back).
+AB_VARIANTS: dict = {}
+# curation_q and retrieval_q append their variant pairs at import
+# time (one-way dependency: they import northstar, never back).
 
 
 def q67_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3724,27 +3708,6 @@ def q72_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         index_dir=ann_index.default_index_dir(sf_dir, "ivf_embeddings"),
         **IVF_INDEX,
     ).orderBy("vec_id")
-
-
-def q72_two_joins_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B-only (`bench.py --ab q72`): the semantic-dedup verdict via
-    two grouped counts + two left joins instead of the endpoint
-    explode + single agg. Registered to adjudicate the r7 protocol
-    drift (2.42 -> 3.35 s on unchanged code) with same-JVM evidence."""
-    emb = load(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(
-        emb,
-        threshold=0.35,
-        index_dir=ann_index.default_index_dir(sf_dir, "ivf_embeddings"),
-        verdict_stage="two_joins",
-        **IVF_INDEX,
-    ).orderBy("vec_id")
-
-
-AB_VARIANTS["q72"] = {
-    "explode_agg": q72_semantic_dedup,
-    "two_joins": q72_two_joins_variant,
-}
 
 
 def q73_stop_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

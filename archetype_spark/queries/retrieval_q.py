@@ -615,24 +615,3 @@ AB_VARIANTS["q113"] = {
     "full_rank": q113_hybrid_rrf,
     "bounded_depth": q117_hybrid_rrf_bounded,
 }
-
-
-def _q118_per_call_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q118 WITHOUT the per-(index, params) driver-table memo: cells
-    + codebook collected on every probe call (the pre-r11 shape)."""
-    emb = load(spark, sf_dir, "embeddings")
-    cells, codebook, codes = ann_index.ensure_ivf_pq(
-        emb, _ivf_pq_dir(sf_dir), **IVF_PQ_INDEX
-    )
-    return similarity.ivf_pq_topk(
-        emb, cells, codebook, codes, k=5, n_probe=IVF_PQ_N_PROBE
-    )
-
-
-# Same-JVM A/B (`bench.py --ab q118`): the r11 ivf_pq_arrays memo
-# (one cells+codebook collect per index per JVM) vs per-call
-# collects. Identical rows by construction (same persisted index).
-AB_VARIANTS["q118"] = {
-    "memoized": q118_ivf_pq_topk,
-    "per_call_collect": _q118_per_call_collect,
-}

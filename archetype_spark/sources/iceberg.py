@@ -571,12 +571,6 @@ def _spec_fields(meta: dict) -> list[dict]:
     return out
 
 
-def _spec_part_cols(meta: dict) -> list[str]:
-    """Spec FIELD names in spec order — the hive-dir / manifest
-    partition-record keys (identity fields: the source column name)."""
-    return [f["name"] for f in _spec_fields(meta)]
-
-
 def _identity_scan_cols(spec_fields: list[dict]) -> list[str]:
     """The table columns the scan must RECONSTRUCT from partition
     metadata: identity-partitioned sources are hive-encoded out of

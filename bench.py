@@ -83,7 +83,7 @@ def _cpu_score_parallel() -> float:
 
 
 def run_ab(sf_dir: str, sf: float, name: str, reps: int) -> None:
-    """Same-JVM A/B of registered operator variants (`--ab q66`):
+    """Same-JVM A/B of registered operator variants (`--ab q93`):
     equality-checked, then interleaved timed reps in ONE process —
     the only comparison BASELINE.md trusts for regression claims
     (cross-session single numbers carry 20-40% noise)."""

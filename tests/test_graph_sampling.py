@@ -271,21 +271,6 @@ def test_mixture_resample_validates(spark):
         sampling.mixture_resample(df, "lang", {"en": -5})
 
 
-def test_dedup_clusters_star_algorithm_matches(spark):
-    ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id int")
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6)], "doc_id int, other_doc_id int"
-    )
-    a = {tuple(r) for r in graph.dedup_clusters(ids, pairs).collect()}
-    b = {
-        tuple(r)
-        for r in graph.dedup_clusters(ids, pairs, algorithm="star").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError, match="algorithm"):
-        graph.dedup_clusters(ids, pairs, algorithm="bogus")
-
-
 def test_deterministic_shuffle_layout_and_seed(spark):
     rows = [(i, "en" if i % 2 == 0 else "de") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id int, lang string")

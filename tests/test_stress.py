@@ -129,7 +129,7 @@ def test_stress_long_doc_chunk_pack(long_docs):
 
 
 def test_stress_long_doc_span_corruption(long_docs):
-    """All three sentinel-numbering formulations agree on book-length
+    """Both sentinel-numbering formulations agree on book-length
     documents; the exploded (linear) one is the documented scale path
     and must complete here without blowing memory."""
     from archetype_spark.operators import packing
