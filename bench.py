@@ -23,8 +23,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,7 +62,6 @@ def _cpu_score_parallel() -> float:
     JSON. Fork-based Processes + a Queue (no task pickling), so it
     works regardless of how bench.py was loaded."""
     import multiprocessing
-    import statistics
 
     ctx = multiprocessing.get_context("fork")
     q = ctx.SimpleQueue()
@@ -94,12 +95,16 @@ def run_ab(sf_dir: str, sf: float, name: str, reps: int) -> None:
     variants = AB_VARIANTS[name]
     spark = get_spark(app_name=f"archetype-ab-{name}")
     spark.sparkContext.setLogLevel("ERROR")
+    # Multisets, not sets: a variant that drops or duplicates a row
+    # must not pass as equal.
     rows = {
-        label: {tuple(r) for r in fn(spark, sf_dir).collect()}
+        label: Counter(tuple(r) for r in fn(spark, sf_dir).collect())
         for label, fn in variants.items()
     }
-    base = next(iter(rows.values()))
-    assert all(v == base for v in rows.values()), "A/B variants disagree on rows"
+    base_label, base = next(iter(rows.items()))
+    for label, got in rows.items():
+        if got != base:
+            sys.exit(f"A/B variants disagree on rows: {label!r} vs {base_label!r}")
     for fn in variants.values():  # warm both paths before timing
         _materialize(fn(spark, sf_dir))
     samples: dict[str, list[float]] = {label: [] for label in variants}
@@ -108,9 +113,7 @@ def run_ab(sf_dir: str, sf: float, name: str, reps: int) -> None:
             t0 = time.monotonic()
             _materialize(fn(spark, sf_dir))
             samples[label].append(round(time.monotonic() - t0, 3))
-    medians = {
-        label: sorted(ts)[len(ts) // 2] for label, ts in samples.items()
-    }
+    medians = {label: statistics.median(ts) for label, ts in samples.items()}
     print(
         json.dumps(
             {
@@ -193,8 +196,7 @@ def main() -> None:
             # Execute the full plan; discard rows in the JVM sink.
             _materialize(df)
             samples.append(time.monotonic() - t0)
-        samples.sort()
-        timings[name] = round(samples[len(samples) // 2], 3)
+        timings[name] = round(statistics.median(samples), 3)
 
     out = {
         "metric": "corpus_wall_sec",

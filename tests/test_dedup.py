@@ -11,8 +11,16 @@ Invariants:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import inspect
+
+import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from archetype_spark.operators import dedup, similarity
 from archetype_spark.tables import load
@@ -278,3 +286,99 @@ def test_shingles_null_text_is_empty_array(spark):
     assert got[2] == ([], 0)
     assert got[3] == ([], 0)  # shorter than n
     assert got[4] == (["a b c", "b c d"], 2)
+
+
+# ------------------------------------------- portable MinHash signature kernel
+_H_MAX = (1 << 28) - 1  # base hashes are 7 hex chars of sha256
+_P = dedup.MINHASH_P
+
+_base_hash = st.one_of(st.integers(0, _H_MAX), st.sampled_from([0, _H_MAX]))
+_doc = st.one_of(
+    st.lists(_base_hash, max_size=3),
+    st.lists(_base_hash, min_size=20, max_size=40),
+)
+_coeff = st.tuples(st.integers(1, _P - 1), st.integers(0, _P - 1))
+
+
+def _naive_minhash(docs, coeffs):
+    return [
+        [min((a * h + b) % _P for h in doc) for a, b in coeffs] if doc else []
+        for doc in docs
+    ]
+
+
+def _kernel_minhash(docs, coeffs):
+    base = np.array([h for doc in docs for h in doc], dtype=np.int64)
+    lengths = np.array([len(doc) for doc in docs], dtype=np.int64)
+    sig = dedup._portable_minhash(base, lengths, np.array(coeffs, dtype=np.int64))
+    assert all(s.dtype == np.int64 for s in sig)
+    return [[int(v) for v in s] for s in sig]
+
+
+@settings(deadline=None)
+@given(
+    docs=st.lists(_doc, max_size=8),
+    coeffs=st.lists(_coeff, min_size=1, max_size=6),
+)
+@example(docs=[], coeffs=[(1, 0)])
+@example(docs=[[0], [_H_MAX], []], coeffs=[(_P - 1, _P - 1), (1, 0)])
+@example(docs=[[], list(range(5000)), [], [7], []], coeffs=[(3, 5)])
+def test_portable_minhash_matches_naive(docs, coeffs):
+    """The batched kernel equals min((a*h + b) % P for h in doc) slot
+    by slot, including the extreme base hashes, empty documents and
+    batches mixing empty, one-shingle and long documents."""
+    assert _kernel_minhash(docs, coeffs) == _naive_minhash(docs, coeffs)
+
+
+def test_portable_minhash_signature_on_spark(spark):
+    """minhash_signature(hash_family='portable') against a hashlib
+    reference: NULL text and a 2-token document get [], and a repeated
+    shingle counts once. The output schema is pinned too."""
+    texts = {
+        1: None,
+        2: "just two",
+        3: "a b c a b c a b c",
+        4: "the quick brown fox jumps over the lazy dog",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    sigs = dedup.minhash_signature(df, num_hashes=8, hash_family="portable")
+    assert sigs.schema == T.StructType(
+        [
+            T.StructField("_id", T.LongType(), True),
+            T.StructField("_sig", T.ArrayType(T.LongType(), True), False),
+        ]
+    )
+
+    def ref(text):
+        w = text.split(" ") if text else []
+        sh = {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+        hs = [int(hashlib.sha256(s.encode()).hexdigest()[:7], 16) for s in sh]
+        return _naive_minhash([hs], dedup.minhash_coeffs(8))[0]
+
+    got = {r["_id"]: list(r["_sig"]) for r in sigs.collect()}
+    assert got == {i: ref(t) for i, t in texts.items()}
+    assert got[1] == got[2] == []
+    assert len(got[3]) == 8
+
+
+def test_portable_kernel_ships_with_wrapped_public_functions(spark, monkeypatch):
+    """Timing wrappers around dedup's public functions (the perfbench
+    tracer installs such wrappers, closing over the SparkContext) must
+    not be pulled into the signature kernel shipped to workers."""
+    sc = spark.sparkContext
+
+    def timed(fn):
+        @functools.wraps(fn)
+        def wrapper(*args, **kwargs):
+            assert sc is not None
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for name, fn in list(vars(dedup).items()):
+        if inspect.isfunction(fn) and not name.startswith("_"):
+            if fn.__module__ == dedup.__name__:
+                monkeypatch.setattr(dedup, name, timed(fn))
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    (row,) = dedup.minhash_signature(df, hash_family="portable").collect()
+    assert len(row["_sig"]) == 64

@@ -147,13 +147,16 @@ def test_stress_long_doc_span_corruption(long_docs):
     assert one[1] == pytest.approx(3334, abs=1)  # ceil(10000/3) blocks
 
 
-def test_stress_long_doc_minhash(long_docs):
+@pytest.mark.parametrize("hash_family", ["xxhash64", "portable"])
+def test_stress_long_doc_minhash(long_docs, hash_family):
     """Shingling + banded MinHash on 10k-token docs: the planted
-    exact-duplicate pairs collide and estimate ~1.0 Jaccard."""
+    exact-duplicate pairs collide and estimate ~1.0 Jaccard. The
+    portable leg runs the Arrow-batched signature kernel, whose
+    working memory must stay per-slot on 10k-shingle documents."""
     from archetype_spark.operators import dedup
 
     pairs = dedup.minhash_lsh_pairs(
-        long_docs, hash_family="xxhash64", threshold=0.8
+        long_docs, hash_family=hash_family, threshold=0.8
     ).collect()
     found = {
         (min(r["doc_id"], r["other_doc_id"]), max(r["doc_id"], r["other_doc_id"]))
